@@ -321,10 +321,10 @@ def _branch_scan_names(name: str, ref: dict, base: "list[str]") -> list:
 def _stage_branch_dvs(positions_df, fc: str, pc: str, path: str,
                       name: str, run: str, table: str) -> list:
     """Write one branch-scoped DV per affected file, straight from
-    executors (same shape as maintenance._stage_dv_positions, but the
-    blobs land FINAL under ``_olive_branch/<name>/_dv/`` — invisible to
-    everything until the ref records them, so no staging suffix is
-    needed; unrecorded debris dies with the branch dir)."""
+    executors (a grouped-map counterpart of maintenance._stage_dvs, but
+    the blobs land FINAL under ``_olive_branch/<name>/_dv/`` —
+    invisible to everything until the ref records them, so no staging
+    suffix is needed; unrecorded debris dies with the branch dir)."""
     import pandas as _pd
 
     def write_group(pdf):

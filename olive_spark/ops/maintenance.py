@@ -627,11 +627,12 @@ def respec_partitions(
 
 def _discovery_scan(
     spark, path: str, table: str, fc: str,
-    columns: "list[str] | None" = None,
+    columns: "list[str] | None" = None, pc: "str | None" = None,
 ):
-    """The affected-file discovery relation shared by predicate
-    mutations (compact(where)/delete_where/update_where): a fresh
-    fileColumn-tagged scan that opts into plan-time pushdown pruning
+    """The affected-file discovery relation shared by the mutations
+    (compact(where)/delete_where/update_where/merge_upsert): a fresh
+    fileColumn-tagged (and, given ``pc``, raw-position-tagged) scan,
+    projected to ``columns``, that opts into plan-time pushdown pruning
     when the session allows it (``spark.sql.python.filterPushdown
     .enabled``) — on a partitioned 100 TB table the discovery then
     prunes whole dirs/files instead of reading everything to learn
@@ -644,6 +645,8 @@ def _discovery_scan(
         .option("table", table)
         .option("fileColumn", fc)
     )
+    if pc:
+        r = r.option("posColumn", pc)
     if columns:
         r = r.option("columns", ",".join(columns))
     try:
@@ -1402,29 +1405,40 @@ def merge_upsert(
     reads old data THROUGH the current schema (new columns all-NULL)
     rather than replaying per-version schemas.
 
-    100 TB shape: phase 1 discovers affected files with a key-column-
-    pruned scan (``columns`` option: only the keys and the provenance
-    column leave the reader) semi-joined against the source — a slim
-    shuffle of keys, never of documents; the collected result is FILE
-    NAMES (bounded by file count, the same driver-side footprint as
-    Delta/Iceberg's MERGE file pruning).  Phase 2 resolves the merge
-    over only the affected files — work proportional to data actually
-    touched, not table size.
+    100 TB shape: ONE key-column-pruned scan (``columns`` option: only
+    the keys, the file name and the row position leave the reader),
+    filtered to the source's per-key [min, max] box, is semi-joined
+    against the source keys; every target row it matches dies, so the
+    matched positions ARE each file's deletion vector, staged
+    executor-side where the rows sit (_discover_and_stage_dvs).  Small
+    sources (by row count, against Spark's own
+    ``spark.sql.autoBroadcastJoinThreshold``) are broadcast and the
+    scan is never shuffled; larger ones join the Spark way and the
+    matched pairs are repartitioned by file.  The driver sees one row
+    per affected file, the write set (landing source rows plus the
+    survivors of rewrite-classed files) is sized from metadata, and
+    documents are never shuffled.  The conditional legs
+    (``update_condition``/``delete_condition``/NOT MATCHED BY SOURCE)
+    first collect the affected FILE NAMES, resolve the merge over only
+    those files, and stage the rows the resolution drops through the
+    same stager — work proportional to data actually touched.
 
     ``strategy`` picks the physical mutation per affected file, from
-    that file's DYING rows (target rows the resolution does not keep):
+    that file's DYING rows (target rows the merge does not keep), in
+    the same pass that finds them:
 
     - "auto" (default): a file whose dying fraction is ≤
-      ``dv_threshold`` gets a merge-on-read DELETION VECTOR (the dying
-      positions land in a tiny ``_olive_dv/`` sidecar, the file's bytes
-      are untouched, replacement rows append as new files —
-      write cost ∝ changed rows, the Delta-DV shape a trickle-CDC
-      workload needs); heavier files take the classic copy-on-write
-      rewrite; a file with NO dying rows (every matched row failed its
-      condition / bystander-only) is left completely untouched.
+      ``dv_threshold`` of its rows (manifest total, header fallback)
+      gets a merge-on-read DELETION VECTOR (the dying positions land
+      in a tiny ``_olive_dv/`` sidecar, the file's bytes are untouched,
+      replacement rows append as new files — write cost ∝ changed
+      rows, the Delta-DV shape a trickle-CDC workload needs); heavier
+      files take the classic copy-on-write rewrite; a file with NO
+      dying rows (every matched row failed its condition / bystander-
+      only) is left completely untouched.
     - "dv": force DVs for every affected file with dying rows.
-    - "rewrite": the pre-r10 behavior — every affected file is
-      rewritten (including byte-identical ones), no dying-set job runs.
+    - "rewrite": every affected file is rewritten (a conditional leg
+      rewrites even byte-identical ones) and no DV is staged.
 
     Whatever the mix, the whole merge lands as ONE snapshot version
     (file adds + removes + DV adds share the commit and the crash-
@@ -1602,6 +1616,10 @@ def merge_upsert(
             for x in (F.min(k).alias(f"__lo_{k}"),
                       F.max(k).alias(f"__hi_{k}"))
         ],
+        *(
+            [F.count_if(F.col("__del")).alias("__ndel")]
+            if delete_col is not None else []
+        ),
     ).first()
     n_src, n_keys = stats["__n"], stats["__nk"]
     nulled = [c for c in uniq if stats[f"__nn_{c}"] != n_src]
@@ -1648,22 +1666,27 @@ def merge_upsert(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-    # phase 1: affected-file discovery on a key-pruned relation — at
-    # 100 TB this scan moves only the key (+ sequence) columns and a
-    # file name.  With latest_by, the batch is first pruned to rows
-    # that can actually WIN (src seq >= the key's stored max — ties go
-    # to the source): a losing row must not mark files affected (an
+    conditional = (
+        update_condition is not None or delete_condition is not None
+        or not_matched_by_source_delete
+    )
+    # phase 1: discovery on a key-pruned relation — at 100 TB this scan
+    # moves only the key (+ sequence) columns, a file name and a row
+    # position.  With latest_by, the batch is first pruned to rows that
+    # can actually WIN (src seq >= the key's stored max — ties go to
+    # the source): a losing row must not mark files affected (an
     # all-stale replayed CDC batch then rewrites nothing) and must not
-    # reach phase 2 at all — unioned in naively, a loser whose stored
-    # winner sits in an UNAFFECTED file would insert as a duplicate.
+    # land at all — a loser whose stored winner sits in an UNAFFECTED
+    # file would insert as a duplicate.
+    fc, pc = "_olive_file", "_olive_pos"
     slim_cols = key_cols if latest_by is None else [*key_cols, latest_by]
-    slim = _discovery_scan(spark, path, table, fc, columns=slim_cols)
+    slim = _discovery_scan(spark, path, table, fc, columns=slim_cols, pc=pc)
     # merge file pruning: rows outside the source's per-key-column
     # [min, max] box can't match any source key — with pushdown the
     # planner drops whole files on their stats, and the filter is a
     # plain re-applied predicate otherwise (never wrong, only unpruned).
-    # Both discovery actions (stored_max, hits) share the SAME filters,
-    # so the DSv2 readInfo reuse stays consistent.
+    # Every use of `slim` (stored max, discovery) shares the SAME
+    # filters, so the DSv2 readInfo reuse stays consistent.
     for k in boundable:
         lo, hi = stats[f"__lo_{k}"], stats[f"__hi_{k}"]
         if lo is not None and hi is not None:
@@ -1705,76 +1728,123 @@ def merge_upsert(
                 )
                 .drop("__tomb_seq")
             )
-    hits = slim.join(src.select(*key_cols), key_cols, "left_semi")
-    affected = sorted(
-        r[0] for r in hits.select(fc).distinct().collect()
-    )
-    if not_matched_by_source_delete:
-        # the NMBS leg affects every file holding an UNMATCHED row that
-        # passes the clause condition — discovered on its own
-        # full-column relation (the condition may reference any target
-        # column; the source-bounds filter above must NOT apply: keys
-        # outside the source's range are precisely the unmatched ones)
-        anti = _discovery_scan(spark, path, table, fc).join(
-            src.select(*key_cols), key_cols, "left_anti"
-        )
-        if not_matched_by_source_condition is not None:
-            anti = anti.filter(F.expr(not_matched_by_source_condition))
-        nmbs_files = [r[0] for r in anti.select(fc).distinct().collect()]
-        affected = sorted(set(affected) | set(nmbs_files))
-    pre_version = current_version(path)
-    _test_hook("serializable_window")
-    precommit = None
-    if isolation == "serializable":
-        # the merge's read set: rows whose keys the source touches —
-        # or, under NOT MATCHED BY SOURCE, EVERY target row (absent
-        # keys get deleted), where any concurrent append conflicts
-        if not_matched_by_source_delete:
-            def _conflicts(files):  # noqa: ARG001 — any append conflicts
-                return bool(files)
-        else:
-            _keys_df = src.select(*key_cols).distinct()
-
-            def _conflicts(files):
-                df = (
-                    spark.read.format("olive").option("table", table)
-                    .option("files", ",".join(files)).load(path)
-                )
-                return bool(
-                    df.join(_keys_df, key_cols, "left_semi")
-                    .limit(1).count() > 0
-                )
-        precommit = _serializable_precommit(spark, path, v0, _conflicts)
-    if not affected:
-        # pure insert: a plain append commit (its own snapshot entry).
-        # The batch may have shrunk (intra-source dedup, all-stale rows
-        # dropped, unmatched tombstones — deleting a row that does not
-        # exist is a no-op, never an insert) — count what actually
-        # lands; an entirely-shrunk batch is a clean no-op, not an
-        # empty commit.
-        ins = src
-        tomb_stage = None
-        persisted = None
+    # the LANDING set — source rows the merge writes — and the winning
+    # tombstones to retain.  Outside the conditional legs the outcome
+    # is decided by the key alone: every target row whose key is in the
+    # (pruned) source dies, every non-tombstone source row lands, every
+    # surviving sequenced tombstone is retained.  Sized without a job
+    # where the validation aggregate already knows the figure; the
+    # pruned sequenced batch is materialized once (its lineage re-runs
+    # the stored-max + floor joins on every use otherwise).
+    cached: list = []
+    n_landing = n_src
+    n_tombs = 0
+    if latest_by is not None:
+        src = src.persist()
+        cached.append(src)
         if delete_col is not None:
-            # one materialization of the pruned batch (persist — the
-            # lineage re-runs the stored-max + floor joins otherwise),
-            # splitting inserts from tombstones-to-retain (staged
-            # EXECUTOR-SIDE — sequences never funnel through the driver)
-            persisted = src.persist()
-            if latest_by is not None:
-                # even with nothing to delete, the tombstone's
-                # sequence must floor future out-of-order updates
-                tomb_stage = _stage_tombstones(
-                    persisted.filter(F.col("__del"))
-                    .select(*key_cols, F.col(latest_by).alias("__seq")),
-                    path, uuid.uuid4().hex[:8],
-                )
-            ins = persisted.filter(~F.col("__del")).drop("__del")
-            n_insert = ins.count()
+            n_all, n_tombs = src.agg(
+                F.count("*"), F.count_if(F.col("__del"))
+            ).first()
+            n_landing = n_all - n_tombs
         else:
-            n_insert = src.count() if latest_by is not None else n_src
-        try:
-            if n_insert == 0:
+            n_landing = src.count()
+    elif delete_col is not None:
+        n_landing = n_src - stats["__ndel"]
+    landing = (
+        src.filter(~F.col("__del")).drop("__del")
+        if delete_col is not None else src
+    )
+    new_tombs = (
+        src.filter(F.col("__del"))
+        .select(*key_cols, F.col(latest_by).alias("__seq"))
+        if n_tombs else None
+    )
+    keys = src.select(*key_cols)
+    # broadcast the key side when the source is small (the row count
+    # is known, the threshold is Spark's own): the semi-join then keeps
+    # the scan's whole-file partitions, so DVs stage with no shuffle
+    bcast = _broadcastable(
+        spark, n_src, [full.schema[k].dataType for k in key_cols]
+    )
+    run = uuid.uuid4().hex[:8]
+    try:
+        staged: list = []
+        if conditional:
+            # the conditional legs resolve per (target, source) pair
+            # below; discovery only collects the FILE NAMES holding a
+            # matched key (bounded by file count, like Delta/Iceberg's
+            # MERGE file pruning)
+            hits = slim.join(keys, key_cols, "left_semi")
+            affected = sorted(
+                r[0] for r in hits.select(fc).distinct().collect()
+            )
+        else:
+            # fused discovery + DV staging: the key semi-join's matched
+            # positions ARE the dying set, staged in place
+            staged = _discover_and_stage_dvs(
+                spark, path, table, keys, run,
+                strategy, dv_threshold,
+                key_cols=key_cols, broadcast=bcast, scan=slim,
+            )
+            affected = [f for f, _dv, _n in staged]
+        if not_matched_by_source_delete:
+            # the NMBS leg affects every file holding an UNMATCHED row
+            # that passes the clause condition — discovered on its own
+            # full-column relation (the condition may reference any
+            # target column; the source-bounds filter above must NOT
+            # apply: keys outside the source's range are precisely the
+            # unmatched ones)
+            anti = _discovery_scan(spark, path, table, fc).join(
+                keys, key_cols, "left_anti"
+            )
+            if not_matched_by_source_condition is not None:
+                anti = anti.filter(F.expr(not_matched_by_source_condition))
+            nmbs_files = [r[0] for r in anti.select(fc).distinct().collect()]
+            affected = sorted(set(affected) | set(nmbs_files))
+        dv_add = [(f, dv) for f, dv, _n in staged if dv is not None]
+        pre_version = current_version(path)
+        _test_hook("serializable_window")
+        precommit = None
+        if isolation == "serializable":
+            # the merge's read set: rows whose keys the source touches —
+            # or, under NOT MATCHED BY SOURCE, EVERY target row (absent
+            # keys get deleted), where any concurrent append conflicts
+            if not_matched_by_source_delete:
+                def _conflicts(files):  # noqa: ARG001 — any append conflicts
+                    return bool(files)
+            else:
+                _keys_df = keys.distinct()
+
+                def _conflicts(files):
+                    df = (
+                        spark.read.format("olive").option("table", table)
+                        .option("files", ",".join(files)).load(path)
+                    )
+                    return bool(
+                        df.join(_keys_df, key_cols, "left_semi")
+                        .limit(1).count() > 0
+                    )
+            try:
+                precommit = _serializable_precommit(
+                    spark, path, v0, _conflicts
+                )
+            except Exception:
+                _discard_staged_dvs(path, dv_add)
+                raise
+        if not affected:
+            # pure insert: a plain append commit (its own snapshot
+            # entry).  The batch may have shrunk (intra-source dedup,
+            # all-stale rows dropped, unmatched tombstones — deleting a
+            # row that does not exist is a no-op, never an insert); an
+            # entirely-shrunk batch is a clean no-op, not an empty
+            # commit.  Even with nothing to delete, a sequenced
+            # tombstone floors future out-of-order updates.
+            tomb_stage = (
+                _stage_tombstones(new_tombs, path, run)
+                if new_tombs is not None else None
+            )
+            if n_landing == 0:
                 _activate_tombstones(spark, path, tomb_stage, key_cols)
                 return {
                     "files_rewritten": 0,
@@ -1786,6 +1856,7 @@ def merge_upsert(
                 }
             before_files = set(_list_chunk_files(path))
             layout = _partition_layout(path)
+            ins = landing
             if layout:
                 # co-locate derived dir values so the partitioned
                 # append emits bounded files per directory, not one
@@ -1814,236 +1885,100 @@ def merge_upsert(
             return {
                 "files_rewritten": 0,
                 "files_added": len(added),
-                "rows_after_in_rewritten": n_insert,
+                "rows_after_in_rewritten": n_landing,
                 "inserted_only": True,
                 "version": current_version(path),
                 "pre_version": pre_version,
             }
-        finally:
-            if persisted is not None:
-                persisted.unpersist()
-    # phase 2: resolve the merge over the affected files.  Every
-    # surviving TARGET row carries its provenance (__file, __pos raw
-    # grid position) through the resolution; a target row that does NOT
-    # survive is "dying" — the per-file dying set is what either
-    # becomes a deletion vector (merge-on-read, small fractions) or
-    # drives the copy-on-write rewrite, decided per file below.
-    pc = "_olive_pos"
-    tagged = (
-        spark.read.format("olive")
-        .option("table", table)
-        .option("fileColumn", fc)
-        .option("posColumn", pc)
-        .load(path)
-    )
-    existing = (
-        tagged.filter(F.col(fc).isin(affected))
-        .withColumnRenamed(fc, "__file")
-        .withColumnRenamed(pc, "__pos")
-    )
-    for c in new_cols:
-        # evolution: pre-evolution rows in rewritten files get NULL for
-        # the new columns (untouched files null-fill at read instead)
-        existing = existing.withColumn(
-            c, F.lit(None).cast(src.schema[c].dataType)
-        )
-    new_tombs = None
-    # WHEN NOT MATCHED BY SOURCE THEN DELETE: unmatched target rows
-    # where the clause condition holds (unconditional when absent) do
-    # not survive; NULL condition keeps the row (SQL DELETE semantics)
-    if not_matched_by_source_delete:
-        nmbs_keep = ~F.coalesce(
-            F.expr(not_matched_by_source_condition)
-            if not_matched_by_source_condition is not None
-            else F.lit(True),
-            F.lit(False),
-        )
-    else:
-        nmbs_keep = None
-    if update_condition is not None or delete_condition is not None:
-        # WHEN MATCHED AND <cond> THEN DELETE / THEN UPDATE, judged per
-        # target row, delete leg first (fixed clause order, like
-        # writing Delta's whenMatchedDelete before whenMatchedUpdate).
-        # Split first so the pair join touches only matched rows; the
-        # conditions see the full (t, s) pair.
-        skeys = src.select(*key_cols)
-        unmatched_t = existing.join(skeys, key_cols, "left_anti")
-        if nmbs_keep is not None:
-            unmatched_t = unmatched_t.filter(nmbs_keep)
-        matched_t = existing.join(skeys, key_cols, "left_semi")
-        on = functools.reduce(
-            operator.and_,
-            [F.col(f"t.{k}") == F.col(f"s.{k}") for k in key_cols],
-        )
-        pairs = matched_t.alias("t").join(src.alias("s"), on, "inner")
-        del_holds = (
-            F.coalesce(F.expr(delete_condition), F.lit(False))
-            if delete_condition is not None else F.lit(False)
-        )
-        # no update_condition = the standard unconditional UPDATE leg
-        # for whatever the delete leg did not consume
-        upd_holds = ~del_holds & (
-            F.coalesce(F.expr(update_condition), F.lit(False))
-            if update_condition is not None else F.lit(True)
-        )
-        kept_t = pairs.filter(~del_holds & ~upd_holds).select(
-            *[F.col(f"t.{c}").alias(c) for c in all_cols],
-            F.col("t.__file").alias("__file"),
-            F.col("t.__pos").alias("__pos"),
-        )
-        replaced_keys = (
-            pairs.filter(upd_holds)
-            .select(*[F.col(f"t.{k}").alias(k) for k in key_cols])
-            .distinct()
-        )
-        # a matched source row lands iff it replaced >= 1 target row;
-        # unmatched source rows are the WHEN NOT MATCHED inserts
-        # (affected files contain every matched key, so anti-joining
-        # `existing`'s keys is exact)
-        inserts = src.join(existing.select(*key_cols), key_cols, "left_anti")
-        src_landing = src.join(
-            replaced_keys, key_cols, "left_semi"
-        ).unionByName(inserts)
-        # source-landed rows have no provenance (allowMissingColumns
-        # null-fills __file/__pos) — they are the rows to WRITE
-        merged = unmatched_t.unionByName(kept_t).unionByName(
-            src_landing, allowMissingColumns=True
-        )
-    elif latest_by is None:
-        # matched keys vanish via the anti-join; only non-tombstone
-        # source rows come back (a matched tombstone = WHEN MATCHED
-        # THEN DELETE)
-        live_src = (
-            src.filter(~F.col("__del")).drop("__del")
-            if delete_col is not None else src
-        )
-        unmatched_t = existing.join(
-            src.select(*key_cols), key_cols, "left_anti"
-        )
-        if nmbs_keep is not None:
-            unmatched_t = unmatched_t.filter(nmbs_keep)
-        merged = unmatched_t.unionByName(
-            live_src, allowMissingColumns=True
-        )
-    else:
-        # latest-wins: per SOURCE-TOUCHED key, the greatest latest_by
-        # among existing + incoming survives (equal sequence prefers
-        # the incoming row).  Bystander rows — keys in an affected file
-        # the source never mentioned — pass through untouched: ranking
-        # them too would silently collapse legal duplicate-key rows the
-        # MERGE was never asked about (r8 second-review finding).
-        skeys = src.select(*key_cols)
-        bystanders = existing.join(skeys, key_cols, "left_anti")
-        contested = existing.join(skeys, key_cols, "left_semi")
-        if delete_col is not None:
-            contested = contested.withColumn("__del", F.lit(False))
-        wm = Window.partitionBy(*key_cols).orderBy(
-            F.col(latest_by).desc(), F.col("__src").desc()
-        )
-        ranked = (
-            contested.withColumn("__src", F.lit(0))
-            .unionByName(
-                src.withColumn("__src", F.lit(1)),
-                allowMissingColumns=True,  # src rows: null provenance
-            )
-            .withColumn("__rn", F.row_number().over(wm))
-            .filter(F.col("__rn") == 1)
-        )
-        if delete_col is not None:
-            # a tombstone that WON the resolution deletes the key; its
-            # sequence is retained (recorded after the rewrite lands)
-            new_tombs = ranked.filter(
-                (F.col("__src") == 1) & F.col("__del")
-            ).select(*key_cols, F.col(latest_by).alias("__seq"))
-            ranked = ranked.filter(~F.col("__del")).drop("__del")
-        merged = ranked.drop("__rn", "__src").unionByName(bystanders)
-    # persist: the resolved dataset is needed several times (count,
-    # dying-set anti-join, the write) — at 100 TB recomputing the
-    # scan+anti-join+union each time would multiply the most expensive
-    # phase; the persisted set is bounded by touched data
-    merged = merged.persist()
-    layout = _partition_layout(path)
-    try:
-        rows = merged.count()
-        run = uuid.uuid4().hex[:8]
-        tomb_stage = None
-        if new_tombs is not None:
-            # MATERIALIZE before the swap: the lineage scans the
-            # affected originals, which the swap is about to retire — a
-            # lazy plan executed afterwards would re-read a different
-            # table (fourth-review finding).  Staged EXECUTOR-SIDE into
-            # a dot-subdir of the sidecar (pre-r10 this collected every
-            # winning delete to the driver — a full-table CDC purge
-            # batch funneled through one process); activated only
-            # after the rewrite lands.
-            tomb_stage = _stage_tombstones(new_tombs, path, run)
-        dv_files: list[str] = []
-        dv_add: list[tuple[str, str]] = []
-        if strategy == "rewrite":
-            # exact pre-r10 copy-on-write behavior, no dying-set job
-            rw_files = list(affected)
-        else:
-            # DYING set: target rows of affected files that did NOT
-            # survive the resolution — exactly what a deletion vector
-            # can mask.  One slim scan (a single key column rides along
-            # for validity; fc/pos are synthesized) anti-joined against
-            # the survivors' provenance; both sides bounded by touched
-            # data.
-            aff_pos = (
-                spark.read.format("olive")
-                .option("table", table)
-                .option("fileColumn", fc)
-                .option("posColumn", pc)
-                .option("columns", key_cols[0])
-                .option("files", ",".join(affected))
-                .load(path)
-                .select(F.col(fc), F.col(pc))
-            )
-            survivors_pos = (
-                merged.filter(F.col("__file").isNotNull())
-                .select(
-                    F.col("__file").alias(fc), F.col("__pos").alias(pc)
-                )
-            )
-            dying = aff_pos.join(survivors_pos, [fc, pc], "left_anti")
-            dying_counts = {
-                r[0]: int(r[1])
-                for r in dying.groupBy(fc).count().collect()
-            }
-            # per-file strategy: a file none of whose rows die is left
-            # untouched entirely (bytes, stats, and indexes survive);
-            # small dying fractions get a DV; the rest rewrite
-            if strategy == "dv":
-                dv_files = [f for f in affected if dying_counts.get(f)]
-                rw_files = []
+        if conditional:
+            merged = _resolve_conditional(
+                spark, path, table, src, key_cols, all_cols, new_cols,
+                affected, update_condition, delete_condition,
+                not_matched_by_source_delete,
+                not_matched_by_source_condition,
+            ).persist()
+            cached.append(merged)
+            rows = merged.count()
+            if strategy == "rewrite":
+                # every affected file rewritten (byte-identical ones
+                # too), no dying-set job
+                rw_files = list(affected)
             else:
-                from olive_spark.format.manifest import load_manifest
-
-                man = load_manifest(path) if os.path.isdir(path) else {}
-                rw_files = []
-                for rel in affected:
-                    d = dying_counts.get(rel, 0)
-                    if d == 0:
-                        continue
-                    total = _file_rows(path, rel, table, man)
-                    if total and d <= dv_threshold * total:
-                        dv_files.append(rel)
-                    else:
-                        rw_files.append(rel)
-            if dv_files:
-                staged = _stage_dv_positions(
-                    dying.filter(F.col(fc).isin(dv_files)), fc, pc,
-                    path, run, table=table,
+                # DYING set: target rows of affected files that did NOT
+                # survive the resolution — exactly what a deletion
+                # vector masks.  A slim positions scan of the affected
+                # files anti-joined against the survivors' provenance,
+                # repartitioned by file into the shared stager; a file
+                # none of whose rows die is left untouched entirely
+                aff_pos = (
+                    spark.read.format("olive")
+                    .option("table", table)
+                    .option("fileColumn", fc)
+                    .option("posColumn", pc)
+                    .option("columns", key_cols[0])
+                    .option("files", ",".join(affected))
+                    .load(path)
+                    .select(fc, pc)
                 )
-                dv_add = [(f, dv) for f, dv, _n in staged]
-        # the write set: every source-landed row (null provenance) plus
-        # survivors of rewrite-classed files; DV-classed and untouched
-        # files keep their survivors in place
-        rewrite_df = merged.filter(
-            F.col("__file").isNull()
-            | (F.col("__file").isin(rw_files) if rw_files else F.lit(False))
-        ).drop("__file", "__pos")
-        rw_rows = rewrite_df.count()
+                survivors_pos = merged.filter(
+                    F.col("__file").isNotNull()
+                ).select(F.col("__file").alias(fc), F.col("__pos").alias(pc))
+                staged = _stage_dvs(
+                    spark, path, table,
+                    aff_pos.join(survivors_pos, [fc, pc], "left_anti")
+                    .repartition(fc),
+                    run, strategy, dv_threshold,
+                )
+                dv_add = [(f, dv) for f, dv, _n in staged if dv is not None]
+                rw_files = [f for f, dv, _n in staged if dv is None]
+            # the write set: every source-landed row (null provenance)
+            # plus survivors of rewrite-classed files; DV-classed and
+            # untouched files keep their survivors in place
+            write_df = merged.filter(
+                F.col("__file").isNull()
+                | (F.col("__file").isin(rw_files) if rw_files
+                   else F.lit(False))
+            ).drop("__file", "__pos")
+            rw_rows = write_df.count()
+        else:
+            # the write set: the landing rows plus the key anti-join
+            # survivors of rewrite-classed files, sized from METADATA
+            # (live rows minus the matched counts the stager returned)
+            rw_files = [f for f, dv, _n in staged if dv is None]
+            write_df = landing
+            if rw_files:
+                survivors = (
+                    spark.read.format("olive").option("table", table)
+                    .option("files", ",".join(rw_files)).load(path)
+                    .join(F.broadcast(keys) if bcast else keys,
+                          key_cols, "left_anti")
+                )
+                for c in new_cols:
+                    # evolution: pre-evolution rows in rewritten files get
+                    # NULL for the new columns (untouched files null-fill
+                    # at read instead)
+                    survivors = survivors.withColumn(
+                        c, F.lit(None).cast(src.schema[c].dataType)
+                    )
+                write_df = survivors.unionByName(landing)
+            dead_rw = sum(n for _f, dv, n in staged if dv is None)
+            dead_dv = sum(n for _f, dv, n in staged if dv is not None)
+            rw_rows = (
+                _live_rows(spark, path, rw_files, table) - dead_rw + n_landing
+            )
+            rows = rw_rows + _live_rows(
+                spark, path, [f for f, _dv in dv_add], table
+            ) - dead_dv
+        dv_files = [f for f, _dv in dv_add]
+        # MATERIALIZE the retained tombstones before the swap: the
+        # lineage scans the affected originals, which the swap is about
+        # to retire — a lazy plan executed afterwards would re-read a
+        # different table (fourth-review finding).  Staged EXECUTOR-
+        # SIDE, activated only after the rewrite lands.
+        tomb_stage = (
+            _stage_tombstones(new_tombs, path, run)
+            if new_tombs is not None else None
+        )
         if rw_rows == 0 and not rw_files and not dv_add:
             # nothing changed anywhere (every matched row failed its
             # condition): clean no-op, no commit
@@ -2059,15 +1994,14 @@ def merge_upsert(
             }
         if new_cols:  # sidecar BEFORE data: see _seed_evolved_sidecar
             _seed_evolved_sidecar(path, table, src.schema, new_cols)
-        from olive_spark.datasource.olive_datasource import _list_chunk_files
-
+        layout = _partition_layout(path)
         wipe_all = (
             rw_rows == 0 and not dv_files
             and len(rw_files) >= len(_list_chunk_files(path))
         )
         n_files = max(1, math.ceil(rw_rows / target_rows))
         finals = _rewrite_and_swap(
-            _shape_for_write(rewrite_df, n_files, layout)
+            _shape_for_write(write_df, n_files, layout)
             if (rw_rows or wipe_all) else None,
             path, rw_files, run,
             table=table, target_rows=target_rows,
@@ -2083,7 +2017,8 @@ def merge_upsert(
             )
         _activate_tombstones(spark, path, tomb_stage, key_cols)
     finally:
-        merged.unpersist()
+        for df in cached:
+            df.unpersist()
     return {
         "files_rewritten": len(rw_files),
         "files_added": len(finals),
@@ -2093,6 +2028,93 @@ def merge_upsert(
         "version": current_version(path),
         "pre_version": pre_version,
     }
+
+
+def _resolve_conditional(
+    spark, path: str, table: str, src, key_cols: "list[str]",
+    all_cols: "list[str]", new_cols: "list[str]", affected: "list[str]",
+    update_condition: "str | None", delete_condition: "str | None",
+    nmbs_delete: bool, nmbs_condition: "str | None",
+):
+    """merge_upsert's conditional legs (``update_condition``,
+    ``delete_condition``, NOT MATCHED BY SOURCE) resolved over the
+    affected files: the rows that survive or land, in table column
+    order.  Every surviving TARGET row carries its provenance
+    (``__file``, ``__pos`` raw grid position); source-landed rows carry
+    NULLs there — they are the rows to WRITE."""
+    from pyspark.sql import functions as F
+
+    fc, pc = "_olive_file", "_olive_pos"
+    existing = (
+        spark.read.format("olive")
+        .option("table", table)
+        .option("fileColumn", fc)
+        .option("posColumn", pc)
+        .load(path)
+        .filter(F.col(fc).isin(affected))
+        .withColumnRenamed(fc, "__file")
+        .withColumnRenamed(pc, "__pos")
+    )
+    for c in new_cols:
+        # evolution: pre-evolution rows in rewritten files get NULL for
+        # the new columns (untouched files null-fill at read instead)
+        existing = existing.withColumn(
+            c, F.lit(None).cast(src.schema[c].dataType)
+        )
+    # WHEN MATCHED AND <cond> THEN DELETE / THEN UPDATE, judged per
+    # target row, delete leg first (fixed clause order, like writing
+    # Delta's whenMatchedDelete before whenMatchedUpdate).  Split first
+    # so the pair join touches only matched rows; the conditions see
+    # the full (t, s) pair.
+    skeys = src.select(*key_cols)
+    unmatched_t = existing.join(skeys, key_cols, "left_anti")
+    if nmbs_delete:
+        # WHEN NOT MATCHED BY SOURCE THEN DELETE: unmatched target rows
+        # where the clause condition holds (unconditional when absent)
+        # do not survive; NULL condition keeps the row (SQL DELETE
+        # semantics)
+        unmatched_t = unmatched_t.filter(~F.coalesce(
+            F.expr(nmbs_condition) if nmbs_condition is not None
+            else F.lit(True),
+            F.lit(False),
+        ))
+    matched_t = existing.join(skeys, key_cols, "left_semi")
+    on = functools.reduce(
+        operator.and_,
+        [F.col(f"t.{k}") == F.col(f"s.{k}") for k in key_cols],
+    )
+    pairs = matched_t.alias("t").join(src.alias("s"), on, "inner")
+    del_holds = (
+        F.coalesce(F.expr(delete_condition), F.lit(False))
+        if delete_condition is not None else F.lit(False)
+    )
+    # no update_condition = the standard unconditional UPDATE leg for
+    # whatever the delete leg did not consume
+    upd_holds = ~del_holds & (
+        F.coalesce(F.expr(update_condition), F.lit(False))
+        if update_condition is not None else F.lit(True)
+    )
+    kept_t = pairs.filter(~del_holds & ~upd_holds).select(
+        *[F.col(f"t.{c}").alias(c) for c in all_cols],
+        F.col("t.__file").alias("__file"),
+        F.col("t.__pos").alias("__pos"),
+    )
+    replaced_keys = (
+        pairs.filter(upd_holds)
+        .select(*[F.col(f"t.{k}").alias(k) for k in key_cols])
+        .distinct()
+    )
+    # a matched source row lands iff it replaced >= 1 target row;
+    # unmatched source rows are the WHEN NOT MATCHED inserts (affected
+    # files contain every matched key, so anti-joining `existing`'s
+    # keys is exact)
+    inserts = src.join(existing.select(*key_cols), key_cols, "left_anti")
+    src_landing = src.join(
+        replaced_keys, key_cols, "left_semi"
+    ).unionByName(inserts)
+    return unmatched_t.unionByName(kept_t).unionByName(
+        src_landing, allowMissingColumns=True
+    )
 
 
 def _file_rows(path: str, rel: str, table: str, man: dict) -> "int | None":
@@ -2114,45 +2136,6 @@ def _file_rows(path: str, rel: str, table: str, man: dict) -> "int | None":
         return _pick_table(header, table).num_rows
     except Exception:  # noqa: BLE001 — unknown size: caller rewrites
         return None
-
-
-def _stage_dv_positions(
-    positions_df, fc: str, pc: str, path: str, run: str,
-    table: "str | None" = None,
-) -> "list[tuple[str, str, int]]":
-    """Stage one deletion vector per distinct file of ``positions_df``
-    (a (file rel, raw position) relation) — written straight from
-    executors (the position list never funnels through the driver;
-    only (file, dv_name, count) triples come back).  Positions are raw
-    row-grid indices from a ``posColumn`` scan that folds existing DVs
-    first, so a new DV never re-marks an already-deleted row and DV
-    files compose by plain union (format/deletion.py)."""
-
-    def write_group(pdf):
-        import os as _os
-
-        import numpy as _np
-        import pandas as _pd
-
-        from olive_spark.format import deletion as _D
-
-        rel = pdf[fc].iloc[0]
-        dv_rel = _os.path.join(_D.DV_DIR, rel, f"{run}.dv")
-        dest = _os.path.join(path, dv_rel) + ".staging"
-        _os.makedirs(_os.path.dirname(dest), exist_ok=True)
-        blob = _D.encode_dv(rel, pdf[pc].to_numpy(_np.uint64), table=table)
-        with open(dest, "wb") as f:
-            f.write(blob)
-        return _pd.DataFrame(
-            {"file": [rel], "dv": [dv_rel], "n": [len(pdf)]}
-        )
-
-    out = (
-        positions_df.groupBy(fc)
-        .applyInPandas(write_group, "file string, dv string, n long")
-        .collect()  # one slim row per affected file, never positions
-    )
-    return [(r["file"], r["dv"], int(r["n"])) for r in out]
 
 
 # ---- opt-in Serializable isolation (r11 verdict task #6) ---------------
@@ -2268,62 +2251,109 @@ def _cond_columns(condition: str, cols: "list[str]") -> "list[str] | None":
     return hit or None
 
 
+def _broadcastable(spark, rows: int, key_types) -> bool:
+    """Would ``rows`` key tuples of ``key_types`` fit under the session's
+    ``spark.sql.autoBroadcastJoinThreshold``?  Sized the way Spark sizes
+    a relation: a row header plus each type's default width (8 bytes
+    for fixed-width types, 20 for strings and the rest)."""
+    import re
+
+    from pyspark.sql.types import (
+        BooleanType, DateType, NumericType, TimestampNTZType, TimestampType,
+    )
+
+    raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
+    m = re.fullmatch(r"\s*(-?\d+)\s*([kmgtp]?)b?\s*", raw.lower())
+    if m is None:
+        return False
+    limit = int(m[1]) << (10 * ("kmgtp".index(m[2]) + 1) if m[2] else 0)
+    fixed = (BooleanType, DateType, NumericType, TimestampType,
+             TimestampNTZType)
+    width = 8 + sum(8 if isinstance(t, fixed) else 20 for t in key_types)
+    return limit >= 0 and rows * width <= limit
+
+
 def _discover_and_stage_dvs(
-    spark, path: str, table: str, condition: str, run: str,
+    spark, path: str, table: str, match, run: str,
     mode: str, dv_threshold: float,
+    key_cols: "list[str] | None" = None, broadcast: bool = False,
+    scan=None,
 ) -> "list[tuple[str, str | None, int]]":
-    """Fused discovery + DV staging for predicate mutations (modes
-    auto/dv): ONE slim scan finds the affected files AND stages each
-    file's candidate deletion vector executor-side, instead of the old
-    discovery-count pass followed by a second posColumn scan of the
-    affected files (two full reads of every affected file → one; at
-    100 TB the affected files' bytes cross the NIC once).  Projects
-    only the predicate's columns (see _cond_columns).
+    """Fused discovery + DV staging, the one matching pass every
+    mutation runs: ONE slim ``fileColumn``/``posColumn`` scan finds the
+    affected files AND stages each file's deletion vector executor-side
+    (two full reads of every affected file → one; at 100 TB the
+    affected files' bytes cross the NIC once).
 
-    Returns [(file_rel, dv_rel | None, n_matched)] sorted by file; a
-    None dv means the file classified copy-on-write (mode "auto",
-    matched fraction > ``dv_threshold`` or unknown total) and nothing
-    was staged for it.  The classification runs executor-side against
-    the same manifest totals (+ size validation, like manifest.lookup)
-    and header fallback the driver-side _file_rows used, so the
-    dv/rewrite split matches the unfused path.
+    ``match`` picks the matched rows: a SQL WHERE string (delete/update,
+    the scan projects only the predicate's columns, see _cond_columns)
+    or a DataFrame of key tuples on ``key_cols`` (merge/txn merge, a
+    semi-join; the scan projects the keys).  ``scan`` overrides the
+    relation (merge passes its bounds-filtered one, shared with its
+    stale-row prune).
 
-    No shuffle at all (guide §2.4): scan partitions bin-pack WHOLE
-    files (_pack_files), so every file's matching positions are already
-    co-located in one partition — a mapInArrow groups them in place and
-    writes each DV where the rows sit, where the old _write_dvs_for
-    path shuffled (file, pos) pairs into a grouped-map.  Staged blobs
-    are invisible until _rewrite_and_swap publishes them; abandoned
-    ``.dv.staging`` files are vacuum-swept debris."""
+    No shuffle when it can be avoided (guide §2.4): scan partitions
+    bin-pack WHOLE files (_pack_files), so a predicate filter — or a
+    semi-join against ``broadcast`` keys — leaves every file's matching
+    positions co-located in one partition.  A key set too large to
+    broadcast is semi-joined by Spark's own strategy and the matched
+    (file, position) pairs are repartitioned by file.  See _stage_dvs
+    for the staging and the returned triples."""
     from pyspark.sql import functions as F
 
     fc, pc = "_olive_file", "_olive_pos"
-    r = (
-        spark.read.format("olive")
-        .option("table", table)
-        .option("fileColumn", fc)
-        .option("posColumn", pc)
+    if isinstance(match, str):
+        if scan is None:
+            probe_cols = _table_columns_local(path, table)
+            scan = _discovery_scan(
+                spark, path, table, fc, pc=pc,
+                columns=_cond_columns(match, probe_cols) if probe_cols
+                else None,
+            )
+        return _stage_dvs(
+            spark, path, table, scan.filter(F.expr(match)).select(fc, pc),
+            run, mode, dv_threshold,
+        )
+    if scan is None:
+        scan = _discovery_scan(spark, path, table, fc, columns=key_cols, pc=pc)
+    hits = scan.join(
+        F.broadcast(match) if broadcast else match, key_cols, "left_semi"
+    ).select(fc, pc)
+    return _stage_dvs(
+        spark, path, table, hits if broadcast else hits.repartition(fc),
+        run, mode, dv_threshold,
     )
-    try:
-        if str(spark.conf.get(
-            "spark.sql.python.filterPushdown.enabled", "false"
-        )).lower() == "true":
-            r = r.option("pushdown", "true")
-    except Exception:  # noqa: BLE001 — conf shape differs on Connect
-        pass
-    probe_cols = _table_columns_local(path, table)
-    slim = _cond_columns(condition, probe_cols) if probe_cols else None
-    if slim:
-        r = r.option("columns", ",".join(slim))
-    scan = r.load(path)
-    want_dv = mode == "dv"
+
+
+def _stage_dvs(
+    spark, path: str, table: str, positions, run: str,
+    mode: str, dv_threshold: float,
+) -> "list[tuple[str, str | None, int]]":
+    """Stage one deletion vector per file of ``positions`` — a
+    (``_olive_file``, ``_olive_pos``) relation whose rows for any one
+    file all sit in ONE partition — with a ``mapInArrow`` that writes
+    each DV where the rows sit (positions never funnel through the
+    driver).  Positions are raw row-grid indices from a ``posColumn``
+    scan that folds existing DVs first, so a new DV never re-marks an
+    already-deleted row and DV files compose by plain union
+    (format/deletion.py).
+
+    Returns [(file_rel, dv_rel | None, n_matched)] sorted by file; a
+    None dv means the file classified copy-on-write and nothing was
+    staged for it: always in ``mode`` "rewrite", never in "dv", and in
+    "auto" when the matched fraction is over ``dv_threshold`` or the
+    file's total is unknown.  The totals are the manifest's (validated
+    against the size on disk, like manifest.lookup) with the file's
+    header as fallback — the same figures _file_rows reads.  Staged
+    blobs are invisible until _rewrite_and_swap publishes them;
+    abandoned ``.dv.staging`` files are vacuum-swept debris."""
     thr = float(dv_threshold)
     # totals ride a broadcast (one manifest parse on the driver, shipped
-    # once per executor) so the grouped-map UDF stays import-light — an
+    # once per executor) so the mapInArrow UDF stays import-light — an
     # executor-side `ops.maintenance` import would drag this whole
-    # module into every pandas worker
+    # module into every Python worker
     totals: dict = {}
-    if not want_dv:
+    if mode == "auto":
         try:
             from olive_spark.format.manifest import load_manifest
 
@@ -2363,11 +2393,11 @@ def _discover_and_stage_dvs(
                 by_file.setdefault(chunk_f[0], []).append(chunk_p)
         out_f, out_dv, out_n = [], [], []
         for rel, plist in by_file.items():
-            positions = _np.concatenate(plist) if len(plist) > 1 else plist[0]
-            n = int(positions.size)
+            pos = _np.concatenate(plist) if len(plist) > 1 else plist[0]
+            n = int(pos.size)
             dv_rel = None
-            write = True
-            if not want_dv:
+            write = mode == "dv"
+            if mode == "auto":
                 hit = bc_totals.value.get(rel)
                 total = None
                 if hit is not None:
@@ -2398,7 +2428,7 @@ def _discover_and_stage_dvs(
                 dest = _os.path.join(path, dv_rel) + ".staging"
                 _os.makedirs(_os.path.dirname(dest), exist_ok=True)
                 blob = _D.encode_dv(
-                    rel, positions.astype(_np.uint64), table=table
+                    rel, pos.astype(_np.uint64), table=table
                 )
                 with open(dest, "wb") as f:
                     f.write(blob)
@@ -2416,8 +2446,7 @@ def _discover_and_stage_dvs(
             )
 
     out = (
-        scan.filter(F.expr(condition)).select(fc, pc)
-        .mapInArrow(stage_partition, "file string, dv string, n long")
+        positions.mapInArrow(stage_partition, "file string, dv string, n long")
         .collect()  # one slim row per affected file, never positions
     )
     return sorted(
@@ -2466,6 +2495,20 @@ def _live_rows_local(
     return total
 
 
+def _live_rows(spark, path: str, rels: "list[str]", table: str) -> int:
+    """Live rows of ``rels``: _live_rows_local, or one counting scan of
+    just those files when the metadata cannot say."""
+    if not rels:
+        return 0
+    n = _live_rows_local(path, rels, table)
+    if n is None:
+        n = (
+            spark.read.format("olive").option("table", table)
+            .option("files", ",".join(rels)).load(path).count()
+        )
+    return n
+
+
 def _discard_staged_dvs(path: str, dv_add: "list[tuple[str, str]]") -> None:
     """Best-effort unlink of staged-but-unpublished DV blobs (abort
     paths); leftovers are inert ``.dv.staging`` debris vacuum sweeps."""
@@ -2496,29 +2539,6 @@ def _table_columns_local(path: str, table: str) -> "list[str] | None":
         return list(th.field_names)
     except Exception:  # noqa: BLE001 — any doubt: full-width scan
         return None
-
-
-def _write_dvs_for(
-    spark, path: str, table: str, condition: str,
-    dv_files: "list[str]", run: str,
-) -> "list[tuple[str, str, int]]":
-    """delete_where's DV leg: positions of rows matching ``condition``
-    in ``dv_files``, staged executor-side via _stage_dv_positions."""
-    from pyspark.sql import functions as F
-
-    fc, pc = "_olive_file", "_olive_pos"
-    scan = (
-        spark.read.format("olive")
-        .option("table", table)
-        .option("fileColumn", fc)
-        .option("posColumn", pc)
-        .option("files", ",".join(dv_files))
-        .load(path)
-    )
-    return _stage_dv_positions(
-        scan.filter(F.expr(condition)).select(fc, pc), fc, pc, path, run,
-        table=table,
-    )
 
 
 @_locked(1, heal_txns=True)
@@ -2590,29 +2610,16 @@ def delete_where(
     fc = "_olive_file"
     cond = F.expr(condition)
     run = uuid.uuid4().hex[:8]
-    if mode == "rewrite":
-        # discovery on its own (possibly pushdown-pruned) relation; the
-        # rewrite below uses a FRESH plain relation — re-filtering one
-        # pushdown relation with a different predicate risks the DSv2
-        # readInfo-reuse hazard (see _discovery_scan).  Projection is
-        # slimmed to the predicate's columns (r15, guide §2.3): the
-        # count needs nothing else.
-        disc = _discovery_scan(
-            spark, path, table, fc,
-            columns=_cond_columns(
-                condition, _table_columns_local(path, table) or []
-            ),
-        )
-        hits = disc.filter(cond).groupBy(fc).count().collect()
-        staged = sorted((r[0], None, int(r[1])) for r in hits)
-    else:
-        # fused discovery + DV staging (r15, guide §1.2/§2.4): one slim
-        # scan instead of discovery-count + a second posColumn scan of
-        # the affected files; the dv/rewrite split is decided executor-
-        # side with the same manifest totals (see _discover_and_stage_dvs)
-        staged = _discover_and_stage_dvs(
-            spark, path, table, condition, run, mode, dv_threshold
-        )
+    # fused discovery + DV staging (r15, guide §1.2/§2.4): one slim scan
+    # on its own (possibly pushdown-pruned) relation finds the affected
+    # files and stages their DVs; the dv/rewrite split is decided
+    # executor-side with the same manifest totals (see
+    # _discover_and_stage_dvs).  The rewrite below uses a FRESH plain
+    # relation — re-filtering one pushdown relation with a different
+    # predicate risks the DSv2 readInfo-reuse hazard (_discovery_scan).
+    staged = _discover_and_stage_dvs(
+        spark, path, table, condition, run, mode, dv_threshold
+    )
     affected = [f for f, _dv, _n in staged]
     n_deleted = int(sum(n for _f, _dv, n in staged))
     pre_version = current_version(path)
@@ -2943,25 +2950,12 @@ def update_where(
         )
     cond = F.expr(condition)
     run = uuid.uuid4().hex[:8]
-    if mode == "rewrite":
-        # discovery on its own (possibly pushdown-pruned, predicate-
-        # column-slimmed) relation — the rewrite keeps using the plain
-        # `tagged` relation (see _discovery_scan for the readInfo-reuse
-        # rationale)
-        disc = _discovery_scan(
-            spark, path, table, fc,
-            columns=_cond_columns(
-                condition, _table_columns_local(path, table) or []
-            ),
-        )
-        hits = disc.filter(cond).groupBy(fc).count().collect()
-        staged = sorted((r[0], None, int(r[1])) for r in hits)
-    else:
-        # fused discovery + DV staging — one slim scan, not two (r15;
-        # see delete_where / _discover_and_stage_dvs)
-        staged = _discover_and_stage_dvs(
-            spark, path, table, condition, run, mode, dv_threshold
-        )
+    # fused discovery + DV staging — one slim scan, not two (r15; see
+    # delete_where / _discover_and_stage_dvs); the rewrite keeps using
+    # the plain `tagged` relation
+    staged = _discover_and_stage_dvs(
+        spark, path, table, condition, run, mode, dv_threshold
+    )
     affected = [f for f, _dv, _n in staged]
     n_updated = int(sum(n for _f, _dv, n in staged))
     pre_version = current_version(path)

@@ -491,25 +491,14 @@ def _stage_delete(
     come from a live posColumn scan (existing DVs fold first), valid
     for the txn's lifetime because :func:`multi_table_txn` holds every
     participant's table write lock across PREPARE→PUBLISH."""
-    from pyspark.sql import functions as F
-
     from olive_spark.format.snapshots import list_live_files
-    from olive_spark.ops.maintenance import _stage_dv_positions
+    from olive_spark.ops.maintenance import _discover_and_stage_dvs
 
     _drop_coord_ptr(path, txn_id, coordinator)
     staged: list = []
     if list_live_files(path):
-        fc, pc = "_olive_file", "_olive_pos"
-        scan = (
-            spark.read.format("olive")
-            .option("table", table)
-            .option("fileColumn", fc)
-            .option("posColumn", pc)
-            .load(path)
-        )
-        staged = _stage_dv_positions(
-            scan.filter(F.expr(condition)).select(fc, pc),
-            fc, pc, path, f"txn-{txn_id}-dv", table=table,
+        staged = _discover_and_stage_dvs(
+            spark, path, table, condition, f"txn-{txn_id}-dv", "dv", 0.0,
         )
     return {
         "path": os.path.abspath(path),
@@ -535,12 +524,17 @@ def _stage_merge(
     from pyspark.sql import functions as F
 
     from olive_spark.format.snapshots import list_live_files
-    from olive_spark.ops.maintenance import _stage_dv_positions
+    from olive_spark.ops.maintenance import (
+        _broadcastable, _discover_and_stage_dvs,
+    )
 
-    if (
+    # one aggregate answers both "any duplicate key?" and "how many
+    # keys?" (the latter picks broadcast vs shuffled key join)
+    most, n_keys = (
         src_df.groupBy(*keys).count()
-        .filter(F.col("count") > 1).limit(1).count()
-    ):
+        .agg(F.max("count"), F.count("*")).first()
+    )
+    if most is not None and most > 1:
         raise ValueError(
             f"multi_table_txn merge: source for {path} has duplicate "
             f"key tuples on {keys} — MERGE requires at most one source "
@@ -549,20 +543,13 @@ def _stage_merge(
     _drop_coord_ptr(path, txn_id, coordinator)
     staged: list = []
     if list_live_files(path):
-        fc, pc = "_olive_file", "_olive_pos"
-        scan = (
-            spark.read.format("olive")
-            .option("table", table)
-            .option("fileColumn", fc)
-            .option("posColumn", pc)
-            .load(path)
-        )
-        matched = scan.join(
-            src_df.select(*keys).dropDuplicates(list(keys)),
-            on=list(keys), how="left_semi",
-        ).select(fc, pc)
-        staged = _stage_dv_positions(
-            matched, fc, pc, path, f"txn-{txn_id}-dv", table=table,
+        key_df = src_df.select(*keys)
+        staged = _discover_and_stage_dvs(
+            spark, path, table, key_df, f"txn-{txn_id}-dv", "dv", 0.0,
+            key_cols=list(keys),
+            broadcast=_broadcastable(
+                spark, n_keys, [key_df.schema[k].dataType for k in keys]
+            ),
         )
     part = _stage_one(
         spark, path, src_df, table, txn_id, coordinator=coordinator,

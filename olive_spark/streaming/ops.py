@@ -424,15 +424,23 @@ def stream_to_branch_available_now(
 
 
 def _offset_index(raw) -> "int | None":
-    """Index field of an olive stream offset (dict or JSON string)."""
+    """Index field of an olive stream offset: a dict, a JSON string, or
+    the Python repr Spark reports for a Python source's offset in
+    ``lastProgress`` (``"{'index': 1, 'digest': '...'}"``)."""
+    import ast
     import json
 
-    try:
-        doc = raw if isinstance(raw, dict) else json.loads(raw)
-        idx = doc.get("index") if isinstance(doc, dict) else None
-        return int(idx) if isinstance(idx, int) and idx >= 0 else None
-    except (ValueError, TypeError):
-        return None
+    doc = raw
+    if not isinstance(raw, dict):
+        try:
+            doc = json.loads(raw)
+        except (ValueError, TypeError):
+            try:
+                doc = ast.literal_eval(raw)
+            except (ValueError, TypeError, SyntaxError):
+                return None
+    idx = doc.get("index") if isinstance(doc, dict) else None
+    return int(idx) if isinstance(idx, int) and idx >= 0 else None
 
 
 def _backlog_drained(progress, source_paths) -> bool:

@@ -52,7 +52,17 @@ def test_merge_updates_and_inserts(spark, tmp_path):
     src = spark.range(990, 1010).selectExpr(
         "id AS k", "id * 100 AS v", "cast(99 as int) AS grp"
     )
-    out = merge_upsert(spark, path, src, ["k"])
+    sc = spark.sparkContext
+    sc.setJobGroup("merge_budget", "merge_budget")
+    try:
+        out = merge_upsert(spark, path, src, ["k"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # one validation aggregate, one fused key-join pass that discovers
+    # AND stages the DVs, one write: a plain upsert stays within budget
+    jobs = sc.statusTracker().getJobIdsForGroup("merge_budget")
+    assert len(jobs) <= 8, jobs
     # auto strategy: a 10-key merge may land as deletion vectors
     # (merge-on-read) instead of rewrites — either way files changed
     assert out["files_rewritten"] + out["files_dv"] >= 1
@@ -83,6 +93,126 @@ def test_merge_rewrites_only_affected_files(spark, tmp_path):
         "a 5-key merge must not rewrite every file (copy-on-write)"
     )
     assert spark.read.format("olive").load(path).count() == 1000
+
+
+def _write_ranges(spark, path, ranges):
+    """One chunk file per (lo, hi) key range, rows (k, k*10, k%7);
+    returns the files' relative names in range order."""
+    from olive_spark.datasource.olive_datasource import _list_chunk_files
+
+    rels = []
+    for lo, hi in ranges:
+        before = set(_list_chunk_files(path)) if os.path.isdir(path) else set()
+        (
+            spark.range(lo, hi)
+            .selectExpr("id AS k", "id * 10 AS v", "cast(id % 7 as int) AS grp")
+            .coalesce(1).write.format("olive").mode("append").save(path)
+        )
+        (new,) = set(_list_chunk_files(path)) - before
+        rels.append(os.path.relpath(new, path))
+    return rels
+
+
+def _dv_names(path):
+    """{file rel: [dv file names]} of the table's live DV sidecars."""
+    from olive_spark.format import deletion as D
+
+    return {f: sorted(n) for f, n in D.list_dvs(path).items()}
+
+
+def test_merge_shuffled_key_join_mixes_dv_and_rewrite(spark, tmp_path):
+    """The fused key-join merge with the key side NOT broadcast (the
+    matched positions are repartitioned by file): duplicate target keys
+    all die, a heavily-hit file rewrites next to lightly-hit DV'd files
+    (one DV each), an unhit file stays untouched, and the table equals
+    a plain-Python replay.  A second merge with strategy="rewrite"
+    rewrites instead of masking."""
+    from olive_spark.datasource.olive_datasource import _list_chunk_files
+    from olive_spark.ops.maintenance import merge_upsert
+
+    path = str(tmp_path / "t")
+    f0, f1, f2, f3 = _write_ranges(
+        spark, path, [(0, 250), (250, 500), (500, 750), (750, 1000)]
+    )
+    # a fifth file holding DUPLICATES of keys 5 and 300
+    spark.createDataFrame([(5, -5, 0), (300, -300, 0)], "k long, v long, grp int") \
+        .coalesce(1).write.format("olive").mode("append").save(path)
+    state = [(k, k * 10, k % 7) for k in range(1000)] + [(5, -5, 0), (300, -300, 0)]
+
+    def replay(src_rows):
+        keys = {r[0] for r in src_rows}
+        return [r for r in state if r[0] not in keys] + list(src_rows)
+
+    src_rows = (
+        [(k, k + 1, 1) for k in range(100)]           # 40% of f0: rewrite
+        + [(k, k + 1, 1) for k in range(300, 305)]     # 2% of f1: DV
+        + [(k, k + 1, 1) for k in range(750, 753)]     # f3: DV
+        + [(k, k + 1, 1) for k in range(2000, 2010)]   # inserts
+    )
+    src = spark.createDataFrame(src_rows, "k long, v long, grp int")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = merge_upsert(spark, path, src, ["k"], dv_threshold=0.1)
+    finally:
+        spark.conf.set(key, prior)
+    state = replay(src_rows)
+    assert _rows(spark.read.format("olive").load(path)) == sorted(state)
+    assert out["files_rewritten"] == 2 and out["files_dv"] == 2, out
+    dvs = _dv_names(path)
+    assert sorted(dvs) == sorted([f1, f3]) and all(
+        len(n) == 1 for n in dvs.values()
+    ), dvs
+    live = set(os.path.relpath(f, path) for f in _list_chunk_files(path))
+    assert {f1, f2, f3} <= live and f0 not in live
+    # rows in the DV'd files (245 + 247) + everything written (150 + 118)
+    assert out["rows_after_in_rewritten"] == 760
+
+    src_rows = [(k, 0, 2) for k in range(600, 603)]
+    out = merge_upsert(
+        spark, path, spark.createDataFrame(src_rows, "k long, v long, grp int"),
+        ["k"], strategy="rewrite",
+    )
+    state = replay(src_rows)
+    assert out["files_rewritten"] == 1 and out["files_dv"] == 0, out
+    assert _rows(spark.read.format("olive").load(path)) == sorted(state)
+    assert sorted(_dv_names(path)) == sorted([f1, f3])
+
+
+def test_live_rows_ignores_stale_manifest_entries(spark, tmp_path):
+    """Merge/delete/update size their rewrite output from
+    _live_rows_local: a manifest entry whose recorded size no longer
+    matches the file must never size anything (the header decides),
+    unknowable files yield None (the caller counts), and a merge over
+    such a table keeps every survivor."""
+    from olive_spark.format.manifest import load_manifest, merge_manifest
+    from olive_spark.ops.maintenance import _live_rows_local, merge_upsert
+
+    path = str(tmp_path / "t")
+    _write_ranges(spark, path, [(0, 50), (50, 100)])
+    man = load_manifest(path)
+    rels = sorted(man)
+    merge_manifest(path, {
+        r: {**man[r], "rows": 0, "size": man[r]["size"] + 1} for r in rels
+    })
+    assert _live_rows_local(path, rels, "data") == 100
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "x.olive").write_bytes(b"not an olive file")
+    assert _live_rows_local(str(bad), ["x.olive"], "data") is None
+    # 30 of 50 rows die: the rewrite-classed file's 20 survivors must be
+    # written although its manifest entry claims 0 rows
+    src = spark.range(0, 30).selectExpr(
+        "id AS k", "cast(-1 as long) AS v", "cast(0 as int) AS grp"
+    )
+    out = merge_upsert(spark, path, src, ["k"])
+    assert out["files_rewritten"] == 1, out
+    assert out["rows_after_in_rewritten"] == 50
+    assert _rows(spark.read.format("olive").load(path)) == sorted(
+        [(k, -1, 0) for k in range(30)]
+        + [(k, k * 10, k % 7) for k in range(30, 100)]
+    )
 
 
 def test_merge_is_one_version_and_time_travel_sees_pre_merge(spark, tmp_path):
@@ -632,6 +762,15 @@ def test_merge_tombstones_unconditional(spark, tmp_path):
     assert 3 not in got and 500 not in got
     assert got[5] == 555 and got[600] == 606
     assert len(got) == 20  # 20 - 1 deleted + 1 inserted
+    # an all-tombstone batch lands nothing: its deletes commit alone
+    gone = spark.createDataFrame(
+        [(7, 0, 0, True), (9, 0, 0, True), (700, 0, 0, True)],
+        "k long, v long, grp int, _deleted boolean",
+    )
+    out = merge_upsert(spark, path, gone, ["k"], delete_col="_deleted")
+    assert out["files_added"] == 0 and out["files_dv"] >= 1, out
+    got = {r["k"] for r in spark.read.format("olive").load(path).collect()}
+    assert len(got) == 18 and not got & {3, 7, 9, 500, 700}
 
     with pytest.raises(ValueError, match="must be boolean"):
         bad = spark.createDataFrame([(1, 1, 0, 1)],

@@ -597,36 +597,62 @@ def test_pq_indexed_scans_only_probed_buckets(spark, tmp_path):
     assert "BatchEvalPython" not in p
 
 
-def test_dv_positions_stage_is_grouped_map_not_collect(spark, tmp_path):
-    """delete_where's DV leg stages positions via a grouped-map over
-    (file, pos) — positions are written executor-side; the only
-    driver-bound rows are one (file, dv, count) triple per file."""
-    from olive_spark.ops.maintenance import _write_dvs_for
-
-    path = str(tmp_path / "t")
-    spark.range(1000).selectExpr("id", "id*2 AS v").coalesce(1) \
-        .write.format("olive").mode("append").save(path)
+def test_key_join_dv_stage_keeps_files_in_one_task(spark, tmp_path, monkeypatch):
+    """The fused key-join discovery (merge / txn merge) hands the DV
+    stager (file, pos) pairs whose rows for one file share a partition:
+    with broadcast keys the semi-join keeps the scan's whole-file
+    partitions (no shuffle exchange at all); with a shuffled join the
+    matched pairs are repartitioned by file.  Either way the staged DVs
+    match exactly the key-matched rows."""
     import glob
     import os
 
-    rel = os.path.relpath(glob.glob(os.path.join(path, "*.olive"))[0], path)
-    # build the SAME positions relation the DV leg groups over and
-    # assert the plan shape (the staging itself is exercised elsewhere)
-    fc, pc = "_olive_file", "_olive_pos"
-    scan = (
-        spark.read.format("olive")
-        .option("fileColumn", fc).option("posColumn", pc)
-        .option("files", rel).load(path)
-    )
-    from pyspark.sql import functions as F
+    from olive_spark import register_olive
+    from olive_spark.ops import maintenance as M
 
-    grouped = (
-        scan.filter(F.expr("id % 100 = 3")).select(fc, pc)
-        .groupBy(fc).agg(F.count("*").alias("n"))
-    )
-    p = plan_of(grouped)
-    assert "BatchScan olive" in p
-    assert "CartesianProduct" not in p and "SinglePartition" not in p
+    register_olive(spark)
+    path = str(tmp_path / "t")
+    spark.range(1000).selectExpr("id AS k", "id*2 AS v").repartition(2) \
+        .write.format("olive").mode("append").save(path)
+    keys = spark.range(0, 1000, 7).selectExpr("id AS k")
+    seen = []
+    real = M._stage_dvs
+
+    def spy(spark_, path_, table, positions, *a):
+        seen.append(plan_of(positions))
+        return real(spark_, path_, table, positions, *a)
+
+    monkeypatch.setattr(M, "_stage_dvs", spy)
+    for i, bc in enumerate((True, False)):
+        staged = M._discover_and_stage_dvs(
+            spark, path, "data", keys, f"plan{i}", "dv", 0.0,
+            key_cols=["k"], broadcast=bc,
+        )
+        assert sum(n for _f, _dv, n in staged) == 143
+        assert all(dv is not None for _f, dv, _n in staged)
+        for _f, dv, _n in staged:
+            os.remove(os.path.join(path, dv) + ".staging")
+    bcast, shuffled = seen
+    # merge decides between the two from the source row count against
+    # Spark's own threshold (a long key is sized 8 + 8 bytes a row)
+    from pyspark.sql.types import LongType
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    try:
+        for conf, rows, want in (("1k", 64, True), ("1k", 65, False),
+                                 ("-1", 1, False), ("10485760b", 10**5, True)):
+            spark.conf.set(key, conf)
+            assert M._broadcastable(spark, rows, [LongType()]) is want, conf
+    finally:
+        spark.conf.set(key, prior)
+    assert "BatchScan olive" in bcast and "LeftSemi" in bcast
+    assert "BroadcastHashJoin" in bcast
+    assert "Exchange hashpartitioning" not in bcast
+    assert "CartesianProduct" not in bcast
+    assert "hashpartitioning(_olive_file" in shuffled
+    assert not glob.glob(os.path.join(path, "_olive_dv", "**", "*.staging"),
+                         recursive=True)
 
 
 def test_nmbs_discovery_is_anti_join_not_cartesian(spark, tmp_path):

@@ -562,6 +562,33 @@ def test_compacted_log_corrupt_non_object_json_is_none(tmp_path):
     assert _load_compacted_log(d) == {"batches": {"0": ["a.olive"]}}
 
 
+def test_backlog_drained_reads_python_repr_offsets(tmp_path):
+    """Spark reports a Python source's endOffset in lastProgress as a
+    Python repr, not JSON; the drain loop's skip-the-probe check must
+    parse it (a JSON-only parse made every drain pay the probe run)."""
+    from olive_spark.streaming.ops import _backlog_drained, _offset_index
+
+    d = str(tmp_path / "src")
+    _write_part(d, 0, 0, 5)
+    repr_off = "{'index': 1, 'digest': 'f21e43c6948ee671'}"
+    assert _offset_index(repr_off) == 1
+    assert _offset_index('{"index": 2}') == 2
+    assert _offset_index({"index": 3}) == 3
+    for bad in (None, "", "{not an offset", "[1]", "{'index': -1}",
+                "{'index': 'x'}", "__import__('os')"):
+        assert _offset_index(bad) is None, bad
+
+    def progress(off):
+        return {"sources": [{"endOffset": off}]}
+
+    assert _backlog_drained(progress(repr_off), [d])
+    assert not _backlog_drained(
+        progress("{'index': 0, 'digest': 'x'}"), [d]
+    )
+    _write_part(d, 1, 5, 10)  # appended after the run: not drained
+    assert not _backlog_drained(progress(repr_off), [d])
+
+
 def test_admission_state_dir_restart_backlog_capped_exactly_once(
     spark, tmp_path_factory
 ):
