@@ -7,9 +7,10 @@ Spark-first mapping of the reference's two entry points
         partitions as olive chunks, one or more files per task (the 4 GiB
         data-section cap means a partition may split into several chunks,
         SURVEY.md §7.4)
-    spark.read.format("olive").load(path)   → one scan partition per chunk
-        file; each partition yields Arrow RecordBatches zero-copy into
-        Spark's columnar pipeline
+    spark.read.format("olive").load(path)   → whole chunk files
+        bin-packed into scan partitions (see maxPartitionBytes /
+        scanParallelism below); each partition yields Arrow
+        RecordBatches zero-copy into Spark's columnar pipeline
 
 Scan-side optimizations (SURVEY.md §4): column pruning via the
 ``columns`` option (only requested columns' buffers are decompressed),
@@ -47,7 +48,14 @@ Options:
                      one Python-worker round trip each
     openCostInBytes  per-file packing padding (default 128 KiB)
     scanParallelism  target scan-wave width for packing (default:
-                     $SPARK_GRAFT_CPUS, else this machine's cores)
+                     $SPARK_GRAFT_CPUS, else this machine's cores,
+                     capped at 8).  The derived default also never
+                     plans partitions under MIN_PARTITION_BYTES (4 MiB,
+                     open-cost padding included): each partition is one
+                     Python worker round trip of ~0.2 CPU s, the decode
+                     work of ~3 on-disk MB at ~0.07 CPU s/MB, so a table
+                     under 4 MiB scans as ONE partition.  An explicit
+                     value sets the width exactly, floor off
     mergeSchema      "true" → union column sets across all chunk headers
                      (schema drift: files written before a column existed
                      null-fill it at read time); default uses the first
@@ -166,15 +174,30 @@ def _parse_asof_timestamp(raw: str) -> float:
     return dt.timestamp()
 
 
-def _chunk_file_name() -> str:
-    """part-<20-digit epoch-µs>-<uuid8>.olive: the zero-padded timestamp
-    makes lexicographic order chronological, so concurrently appended
-    files land at the END of the sorted listing — the property the
-    streaming reader's index offsets depend on (a pure-uuid name could
-    sort into the middle of already-consumed indices)."""
+def _chunk_file_name(task: int = 0) -> str:
+    """part-<20-digit epoch-µs>-<task>-<uuid8>.olive: the zero-padded
+    timestamp makes lexicographic order chronological, so concurrently
+    appended files land at the END of the sorted listing — the property
+    the streaming reader's index offsets depend on (a pure-uuid name
+    could sort into the middle of already-consumed indices).  ``task``
+    is the writer task's partition id; see :func:`_chunk_file_order`."""
     import time
 
-    return f"part-{int(time.time() * 1e6):020d}-{uuid.uuid4().hex[:8]}.olive"
+    return (
+        f"part-{int(time.time() * 1e6):020d}-{task:05d}-"
+        f"{uuid.uuid4().hex[:8]}.olive"
+    )
+
+
+def _chunk_file_order(fp: str) -> tuple:
+    """Sort key giving one write's files in (writer partition, emit
+    order): concurrent tasks interleave their timestamps, so a rewrite
+    that renames its output in plain listing order would scatter the
+    input's file order (and key clustering) across the new names."""
+    name = os.path.basename(fp)
+    bits = name.split("-")
+    task = int(bits[2]) if len(bits) == 4 and bits[2].isdigit() else 0
+    return (os.path.dirname(fp), task, name)
 
 
 def _list_chunk_files(path: str) -> list[str]:
@@ -349,20 +372,39 @@ class OliveInputPartition(InputPartition):
     dvs: tuple = ()
 
 
+# Smallest scan partition a DERIVED scan width may plan (padded bytes,
+# like every size the packer sees).  Each Python worker round trip — a
+# scan task, a planner call, a writer or mapInArrow task — costs ~0.2
+# CPU s whatever it carries (4-vCPU host: a warm count() over 12 tiny
+# files costs 0.27 CPU s more per extra partition).  Most of it is
+# pyspark's per-task setup_spark_files -> importlib.invalidate_caches(),
+# which makes every cached zipimporter of pyspark.zip re-read the zip
+# directory (~0.2 CPU s a call in a worker); the planners' own
+# schema() + partitions() take ~10 ms on a cold 20-file table.
+# Scanning lineitem costs ~0.07 CPU s per on-disk MB, so a partition
+# under ~3 MB pays more for its round trip than for its data; 4 MiB
+# rounds that up.  The value comes from that one estimate, not from a
+# sweep: on a 4-wide scan it binds only for tables under 16 MiB padded.
+MIN_PARTITION_BYTES = 4 << 20
+
+
 def _pack_files(
     files: Sequence[str],
     max_partition_bytes: int,
     open_cost: int,
     min_partitions: int,
+    min_partition_bytes: int = 0,
 ) -> list[tuple[str, ...]]:
     """Bin-pack chunk files into scan partitions the way Spark's native
     file sources do (maxPartitionBytes / openCostInBytes): each Python
     DS task carries a fixed worker round-trip cost, so scanning many
     small files one-per-task is dominated by overhead, while one huge
     partition serializes the scan.  Target split size =
-    max(openCost, min(maxPartitionBytes, totalBytes/minPartitions)) —
-    small layouts collapse into ~one wave of tasks, 100 TB layouts cap
-    at maxPartitionBytes and fan out to tens of thousands of tasks."""
+    max(openCost, min(maxPartitionBytes, max(minPartitionBytes,
+    totalBytes/minPartitions))) — small layouts collapse into ~one wave
+    of tasks no smaller than ``min_partition_bytes`` (a table under it
+    is one partition), 100 TB layouts cap at maxPartitionBytes and fan
+    out to tens of thousands of tasks."""
     def _size(f: str) -> int:
         try:
             return os.path.getsize(f)
@@ -377,7 +419,10 @@ def _pack_files(
     total = sum(s for _, s in sized)
     target = max(
         open_cost + 1,
-        min(max_partition_bytes, -(-total // max(1, min_partitions))),
+        min(
+            max_partition_bytes,
+            max(min_partition_bytes, -(-total // max(1, min_partitions))),
+        ),
     )
     bins: list[tuple[str, ...]] = []
     cur: list[str] = []
@@ -424,18 +469,21 @@ class OliveReader(DataSourceReader):
             options.get("opencostinbytes", options.get("openCostInBytes", 128 << 10))
         )
         # Target scan waves for SMALL tables (big tables get their
-        # parallelism from the maxPartitionBytes cap, not this floor).
+        # parallelism from the maxPartitionBytes cap, not this width).
         # Default caps at 8 regardless of core count: Python DS task
         # results funnel through serial driver-side handling, so 16
         # one-file partitions measured 2x SLOWER than 8 packed bins for
-        # a warm small count() even on 32 cores.  An explicit
-        # scanParallelism option overrides the cap.
+        # a warm small count() even on 32 cores.  A derived width also
+        # keeps partitions above MIN_PARTITION_BYTES; an explicit
+        # scanParallelism option overrides both the cap and the floor.
         opt = options.get("scanparallelism", options.get("scanParallelism", 0))
         if opt:
             self.min_partitions = int(opt)
+            self.min_partition_bytes = 0
         else:
             cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 0) or (os.cpu_count() or 8))
             self.min_partitions = min(8, cpus)
+            self.min_partition_bytes = MIN_PARTITION_BYTES
         snap = options.get("snapshot")
         self.snapshot = int(snap) if snap is not None else None
         stag = options.get("snapshottag", options.get("snapshotTag"))
@@ -641,7 +689,8 @@ class OliveReader(DataSourceReader):
                 dvs=tuple((f, dv_map[f]) for f in bin_ if f in dv_map),
             )
             for bin_ in _pack_files(
-                keep, self.max_partition_bytes, self.open_cost, self.min_partitions
+                keep, self.max_partition_bytes, self.open_cost,
+                self.min_partitions, self.min_partition_bytes,
             )
         ]
 
@@ -1385,7 +1434,7 @@ class OliveWriter(DataSourceArrowWriter):
         )
         d = os.path.join(self.path, subdir) if subdir else self.path
         os.makedirs(d, exist_ok=True)
-        fp = os.path.join(d, _chunk_file_name())
+        fp = os.path.join(d, _chunk_file_name(self._task))
         with open(fp, "wb") as f:
             f.write(blob)
         files.append(fp)
@@ -1406,7 +1455,10 @@ class OliveWriter(DataSourceArrowWriter):
 
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> OliveCommitMessage:
         import pyarrow as pa
+        from pyspark import TaskContext
 
+        ctx = TaskContext.get()
+        self._task = ctx.partitionId() if ctx is not None else 0
         os.makedirs(self.path, exist_ok=True)
         files: list[str] = []
         self._summaries: list[tuple] = []
@@ -1930,6 +1982,7 @@ class OliveStreamReader(DataSourceStreamReader):
                 self._batch.max_partition_bytes,
                 self._batch.open_cost,
                 self._batch.min_partitions,
+                self._batch.min_partition_bytes,
             )
         ]
 

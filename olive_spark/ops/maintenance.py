@@ -242,7 +242,20 @@ def compact(
     curve: str = "morton",
 ) -> dict:
     """Rewrite the olive directory at ``path`` into files of
-    ``target_rows``; with ``sort_by``, range-partition + sort so page
+    ``target_rows``.  Plain compaction (no ``sort_by``/``zorder_by``,
+    unpartitioned) is Delta's ``OPTIMIZE`` shape: the scan packs WHOLE
+    files into partitions in file order, neighbouring partitions are
+    coalesced down to ``n = ceil(rows / target_rows)`` when the scan
+    has more, and each of the ``W = min(P, n)`` writer tasks cuts its
+    rows into ``target_rows`` files — no shuffle.  The output is named
+    in (writer task, emit order), so file order is kept across
+    repeated compactions: files with disjoint key ranges compact into
+    files with disjoint key ranges.  Every writer task may end in one
+    short file, so a compaction of ``rows`` rows over ``P`` scan
+    partitions writes at most ``n + W - 1`` files of at most
+    ``target_rows`` rows each (exactly one file when ``n == 1``).
+
+    With ``sort_by``, range-partition + sort so page
     min/max stats are disjoint across files; with ``zorder_by`` (2-4
     columns), cluster on a Morton-interleaved key so range predicates on
     EITHER column prune files (the multi-dimensional skipping a single
@@ -434,7 +447,13 @@ def compact(
     elif layout:
         df = df.repartition(n_files, *layout["shape"])
     else:
-        df = df.repartition(n_files)
+        # plain compaction writes through the scan's partitions (whole
+        # files, bin-packed in file order); coalesce merges neighbouring
+        # partitions, without an exchange, when there are more of them
+        # than output files, so each writer task's tail file is not
+        # multiplied by the scan width.  The writer's chunkRows cut
+        # sets the file size
+        df = df.coalesce(n_files)
 
     run = uuid.uuid4().hex[:8]
     original_rels = [os.path.relpath(f, path) for f in before]
@@ -776,7 +795,10 @@ def _rewrite_and_swap(
     (so recovery finishes it), and lands in the one snapshot entry —
     a mixed rewrite-some-files / DV-others mutation is still exactly
     one version."""
-    from olive_spark.datasource.olive_datasource import _list_chunk_files
+    from olive_spark.datasource.olive_datasource import (
+        _chunk_file_order,
+        _list_chunk_files,
+    )
     from olive_spark.format.manifest import load_manifest, merge_manifest
 
     tmp = f"{path}.compact-{prefix}-{run}"  # vacuum's <path>.compact-* glob
@@ -833,7 +855,10 @@ def _rewrite_and_swap(
             w = w.option("partitionBy", layout["spec"])
         w.mode("append").save(tmp)
         tmp_stats = load_manifest(tmp)  # per-file stats from the commit
-        for i, f in enumerate(_list_chunk_files(tmp)):
+        # final names follow (writer partition, emit order), so a
+        # clustered input keeps its file order across repeated rewrites
+        for i, f in enumerate(sorted(_list_chunk_files(tmp),
+                                     key=_chunk_file_order)):
             rel = os.path.relpath(f, tmp)
             sub = os.path.dirname(rel)
             if not sub and layout:

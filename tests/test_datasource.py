@@ -235,6 +235,173 @@ def test_compact_merges_small_files(spark, tmp_path):
     assert sorted(r["k"] for r in back.collect()) == list(range(500))
 
 
+def _clustered_table(d, files: int, rows_per_file: int) -> None:
+    """``files`` chunk files holding consecutive key ranges."""
+    d.mkdir()
+    for i in range(files):
+        lo = i * rows_per_file
+        keys = range(lo, lo + rows_per_file)
+        t = pa.table({"k": pa.array(keys, pa.int64()),
+                      "s": pa.array([f"row-{k}" for k in keys], pa.string())})
+        (d / f"part-{i:03d}.olive").write_bytes(write_chunk({"data": t}))
+
+
+def _file_key_ranges(path: str) -> "list[tuple[int, int, int]]":
+    """(min k, max k, rows) per live chunk file, in listing order (the
+    order the next scan packs them in)."""
+    from olive_spark.datasource.olive_datasource import (
+        _list_chunk_files,
+        _read_header_bytes,
+    )
+
+    out = []
+    for fp in _list_chunk_files(path):
+        header, _ = _read_header_bytes(fp)
+        th = header.tables[0]
+        st = th.fields[th.field_names.index("k")].stats
+        out.append((min(st["min"]), max(st["max"]), th.num_rows))
+    return out
+
+
+def _assert_disjoint(ranges) -> None:
+    """Ascending, non-overlapping key ranges in listing order."""
+    for (_, hi1, _), (lo2, _, _) in zip(ranges, ranges[1:]):
+        assert hi1 < lo2, f"file key ranges overlap: {ranges}"
+
+
+def _scan_partitions(spark, path: str, cap: int) -> int:
+    from olive_spark.datasource.olive_datasource import OliveReader
+
+    return len(OliveReader(
+        {"path": path, "maxPartitionBytes": str(cap)},
+        spark.read.format("olive").load(path).schema,
+    ).partitions())
+
+
+def _compact_job_tasks(spark, group: str, fn):
+    """Run ``fn`` in a job group; return (its result, [tasks per job])."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    return out, [
+        sum(tracker.getStageInfo(s).numTasks
+            for s in tracker.getJobInfo(j).stageIds)
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+
+
+class _ScanCapped:
+    """A session whose reads carry a ``maxPartitionBytes`` option, so a
+    verb's own scan plans several partitions of a small table."""
+
+    def __init__(self, session, cap: int) -> None:
+        self._session, self._cap = session, cap
+
+    def __getattr__(self, name):
+        return getattr(self._session, name)
+
+    @property
+    def read(self):
+        return self._session.read.option("maxPartitionBytes", self._cap)
+
+
+def test_compact_keeps_clustering_without_a_shuffle(spark, tmp_path, monkeypatch):
+    """Plain compaction writes straight through the scan's partitions:
+    the write plan has no Exchange, and a key-clustered table keeps
+    disjoint per-file key ranges (a round-robin repartition spreads every
+    output file over the whole key range)."""
+    import contextlib
+    import io
+
+    from olive_spark.ops import maintenance as M
+
+    d = tmp_path / "clustered"
+    _clustered_table(d, 20, 500)
+    plans = []
+    rewrite = M._rewrite_and_swap
+
+    def spy(df, *args, **kwargs):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plans.append(buf.getvalue())
+        return rewrite(df, *args, **kwargs)
+
+    monkeypatch.setattr(M, "_rewrite_and_swap", spy)
+    stats = M.compact(spark, str(d), target_rows=800)
+    assert stats == {"files_before": 20, "files_after": 13, "rows": 10_000}
+    assert len(plans) == 1 and "BatchScan olive" in plans[0]
+    assert "Exchange" not in plans[0], plans[0]
+    ranges = _file_key_ranges(str(d))
+    _assert_disjoint(ranges)
+    assert [r for _, _, r in ranges] == [800] * 12 + [400]
+
+
+def test_compact_writes_one_task_per_scan_partition(spark, tmp_path):
+    """With the scan forced into fewer partitions than output files,
+    compaction is one job of one writer task per scan partition; every
+    file holds at most target_rows rows, each task adds at most one
+    short file, and file key ranges stay disjoint in listing order,
+    also after a second compaction of the result."""
+    from olive_spark.ops.maintenance import compact
+
+    d = tmp_path / "capped"
+    _clustered_table(d, 20, 500)
+    cap = 3 * (os.path.getsize(d / "part-000.olive") + (128 << 10))
+    capped = _ScanCapped(spark, cap)
+    for rnd in range(2):
+        parts = _scan_partitions(spark, str(d), cap)
+        assert 1 < parts < 13
+        stats, tasks = _compact_job_tasks(
+            spark, f"compact_tasks_{rnd}",
+            lambda: compact(capped, str(d), target_rows=800),
+        )
+        assert tasks == [parts], tasks
+        ranges = _file_key_ranges(str(d))
+        assert stats["rows"] == sum(r for _, _, r in ranges) == 10_000
+        assert all(r <= 800 for _, _, r in ranges)
+        assert len(ranges) <= -(-10_000 // 800) + parts - 1
+        _assert_disjoint(ranges)
+    back = spark.read.format("olive").load(str(d))
+    assert sorted(r["k"] for r in back.collect()) == list(range(10_000))
+
+
+def test_compact_coalesces_a_wide_scan_and_settles(spark, tmp_path):
+    """A scan with more partitions than output files is coalesced, with
+    no shuffle, to one writer task per output file, so the tail files
+    do not multiply with the scan width: the result is exactly
+    ceil(rows/target_rows) files here, in key order, and a later
+    compact_if_needed over the same wide scan has nothing to do."""
+    from olive_spark.ops.maintenance import compact, compact_if_needed
+
+    d = tmp_path / "wide"
+    _clustered_table(d, 20, 500)
+    cap = os.path.getsize(d / "part-000.olive") + (128 << 10)
+    assert _scan_partitions(spark, str(d), cap) == 20
+    capped = _ScanCapped(spark, cap)
+    stats, tasks = _compact_job_tasks(
+        spark, "compact_wide",
+        lambda: compact(capped, str(d), target_rows=5000),
+    )
+    assert tasks == [2], tasks
+    assert stats == {"files_before": 20, "files_after": 2, "rows": 10_000}
+    ranges = _file_key_ranges(str(d))
+    assert [r for _, _, r in ranges] == [5000, 5000]
+    _assert_disjoint(ranges)
+    again = compact_if_needed(capped, str(d), target_rows=5000)
+    assert again == {"compacted": False, "small_files": 2, "files": 2}
+
+    one = tmp_path / "wide_one"
+    _clustered_table(one, 20, 500)
+    stats = compact(capped, str(one), target_rows=10_000)
+    assert stats == {"files_before": 20, "files_after": 1, "rows": 10_000}
+
+
 def test_compact_sorted_layout_gives_disjoint_file_stats(spark, tmp_path):
     """After sort_by compaction each file owns a disjoint key interval —
     the property that makes range predicates prune whole files."""
@@ -336,6 +503,28 @@ def test_scan_partitions_bin_pack_small_files(spark, tmp_path):
     # data survives packing end-to-end
     got = spark.read.format("olive").option("scanParallelism", "4").load(str(d))
     assert got.count() == 1200
+
+
+def test_scan_below_partition_floor_plans_one_partition(spark, tmp_path):
+    """A derived scan width never plans partitions under
+    MIN_PARTITION_BYTES: a table below the floor is one partition, one
+    Python worker round trip."""
+    from olive_spark.datasource.olive_datasource import (
+        MIN_PARTITION_BYTES,
+        OliveReader,
+    )
+
+    d = tmp_path / "floor"
+    d.mkdir()
+    t = pa.table({"x": pa.array(range(100), pa.int64())})
+    for i in range(12):
+        (d / f"part-{i:03d}.olive").write_bytes(write_chunk({"data": t}))
+    padded = sum(os.path.getsize(d / f) + (128 << 10) for f in os.listdir(d))
+    assert padded < MIN_PARTITION_BYTES
+    schema = spark.read.format("olive").load(str(d)).schema
+    parts = OliveReader({"path": str(d)}, schema).partitions()
+    assert [len(p.files) for p in parts] == [12]
+    assert spark.read.format("olive").load(str(d)).count() == 1200
 
 
 def test_header_cache_hits_and_invalidates(tmp_path):

@@ -131,13 +131,16 @@ def test_sliced_list_offsets_property(data):
     max_pb=st.integers(1 << 16, 1 << 28),
     open_cost=st.integers(0, 1 << 20),
     min_parts=st.integers(1, 64),
+    floor=st.sampled_from([0, 1 << 20, 4 << 20]),
 )
 @settings(max_examples=200, deadline=None)
 def test_pack_files_partition_invariants(tmp_path_factory, sizes, max_pb,
-                                         open_cost, min_parts):
+                                         open_cost, min_parts, floor):
     """Bin-packing must (a) assign every file to exactly one bin, in
     order; (b) never exceed maxPartitionBytes per bin except for a
-    single oversized file; (c) produce at least one bin."""
+    single oversized file; (c) produce at least one bin; (d) fill every
+    bin before the last to the partition floor, unless the
+    maxPartitionBytes cap closed it."""
     import os
 
     from olive_spark.datasource.olive_datasource import _pack_files
@@ -149,17 +152,21 @@ def test_pack_files_partition_invariants(tmp_path_factory, sizes, max_pb,
         with open(p, "wb") as fh:
             fh.truncate(s)
         files.append(p)
-    bins = _pack_files(files, max_pb, open_cost, min_parts)
+    bins = _pack_files(files, max_pb, open_cost, min_parts, floor)
     flat = [f for b in bins for f in b]
     assert flat == files, "every file exactly once, order preserved"
     assert all(len(b) >= 1 for b in bins)
+    padded = lambda fs: sum(os.path.getsize(f) + open_cost for f in fs)  # noqa: E731
     for b in bins:
         if len(b) > 1:
-            adj = sum(os.path.getsize(f) + open_cost for f in b)
             # multi-file bins respect the hard cap up to one trailing
             # file (the wave-target close happens after adding)
-            head = sum(os.path.getsize(f) + open_cost for f in b[:-1])
-            assert head <= max_pb, "bin grew past the cap before closing"
+            assert padded(b[:-1]) <= max_pb, "bin grew past the cap before closing"
+    for b, nxt in zip(bins, bins[1:]):
+        capped = padded(b) + padded(nxt[:1]) > max_pb
+        assert capped or padded(b) >= min(floor, max_pb), (
+            "bin closed under the partition floor"
+        )
 
 
 @given(
