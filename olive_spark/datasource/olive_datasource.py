@@ -52,10 +52,10 @@ Options:
                      capped at 8).  The derived default also never
                      plans partitions under MIN_PARTITION_BYTES (4 MiB,
                      open-cost padding included): each partition is one
-                     Python worker round trip of ~0.2 CPU s, the decode
-                     work of ~3 on-disk MB at ~0.07 CPU s/MB, so a table
-                     under 4 MiB scans as ONE partition.  An explicit
-                     value sets the width exactly, floor off
+                     Python worker round trip with a fixed cost (see
+                     MIN_PARTITION_BYTES), so a table under 4 MiB scans
+                     as ONE partition.  An explicit value sets the
+                     width exactly, floor off
     mergeSchema      "true" → union column sets across all chunk headers
                      (schema drift: files written before a column existed
                      null-fill it at read time); default uses the first
@@ -374,17 +374,17 @@ class OliveInputPartition(InputPartition):
 
 # Smallest scan partition a DERIVED scan width may plan (padded bytes,
 # like every size the packer sees).  Each Python worker round trip — a
-# scan task, a planner call, a writer or mapInArrow task — costs ~0.2
-# CPU s whatever it carries (4-vCPU host: a warm count() over 12 tiny
-# files costs 0.27 CPU s more per extra partition).  Most of it is
-# pyspark's per-task setup_spark_files -> importlib.invalidate_caches(),
-# which makes every cached zipimporter of pyspark.zip re-read the zip
-# directory (~0.2 CPU s a call in a worker); the planners' own
-# schema() + partitions() take ~10 ms on a cold 20-file table.
-# Scanning lineitem costs ~0.07 CPU s per on-disk MB, so a partition
-# under ~3 MB pays more for its round trip than for its data; 4 MiB
-# rounds that up.  The value comes from that one estimate, not from a
-# sweep: on a 4-wide scan it binds only for tables under 16 MiB padded.
+# scan task, a planner call, a writer or mapInArrow task — has a fixed
+# cost whatever it carries: ~0.04 CPU s once the worker has imported
+# olive_spark (which pins Spark's own archives, see _pin_spark_archives
+# in olive_spark/__init__.py), ~0.2 CPU s before.  Scanning lineitem
+# costs ~0.05 CPU s per on-disk MiB, so a round trip weighs about as
+# much as 1 MiB of data (4-vCPU host, tools/probe_scan_floor.py).  The
+# 4 MiB value was set when the round trip cost ~0.2 CPU s; the probe's
+# 1/2/4 MiB sweep on 4-17 MiB tables put the three floors within
+# 0.1 CPU s and 10% latency of each other, 4 MiB using the least CPU
+# below 8 MiB.  On a 4-wide scan it binds only for tables under 16 MiB
+# padded.
 MIN_PARTITION_BYTES = 4 << 20
 
 

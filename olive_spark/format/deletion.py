@@ -253,28 +253,6 @@ def retire_target_dvs(path: str, target_rel: str, history: bool) -> int:
     return n
 
 
-def reactivate_dv(path: str, dv_rel: str) -> None:
-    """RESTORE helper: bring a history-retired DV back into the live
-    tree by hardlink (copy fallback), keeping the history name valid
-    for older snapshots."""
-    from olive_spark.format.snapshots import HISTORY_DIR
-
-    live = os.path.join(path, dv_rel)
-    if os.path.exists(live):
-        return
-    hist = os.path.join(path, HISTORY_DIR, dv_rel)
-    if not os.path.exists(hist):
-        raise ValidationError(
-            f"DV {dv_rel} not found in history — vacuumed away; the "
-            "target snapshot is no longer reconstructable"
-        )
-    os.makedirs(os.path.dirname(live), exist_ok=True)
-    try:
-        os.link(hist, live)
-    except OSError:
-        shutil.copy2(hist, live)
-
-
 def retire_dv_file(path: str, dv_rel: str, history: bool) -> None:
     """Retire ONE live DV file (RESTORE undoing a post-version DV)."""
     from olive_spark.format.snapshots import HISTORY_DIR
