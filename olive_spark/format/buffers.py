@@ -81,6 +81,17 @@ def slice_fixed(buf: pa.Buffer, itemsize: int, offset: int, length: int) -> memo
     return memoryview(buf)[start:end]
 
 
+def offsets_dtype(dt: pa.DataType):
+    """The numpy dtype of a list, binary or string type's offsets."""
+    if (
+        pa.types.is_large_list(dt)
+        or pa.types.is_large_binary(dt)
+        or pa.types.is_large_string(dt)
+    ):
+        return np.int64
+    return np.int32
+
+
 def normalized_offsets(arr_buf: pa.Buffer, np_dtype, offset: int, length: int) -> np.ndarray:
     """offsets[offset : offset+length+1] rebased to start at 0, as int64
     (reference normalize_offsets, src/write.zig:962-980)."""

@@ -29,8 +29,11 @@ File format (one DV file, magic ``ODV1``):
 
     b"ODV1" | u32 header_len | header JSON | zstd(u64-le positions)
 
-The header carries {"target", "count"} so metadata consumers
-(count_rows/describe) read 4+4+header bytes, never the payload.
+The header carries {"count"} (and {"table"} when scoped) so metadata
+consumers (count_rows/describe) read 4+4+header bytes, never the payload.
+The directory names the target file, so the header does not: a DV's
+fixed cost stays small beside the few positions a small delete records.
+DVs written with a {"target"} field read unchanged; readers ignore it.
 
 The reference format is batch-only with no mutation layer
 (/root/reference/src/root.zig:9-16); DVs are this engine's lakehouse
@@ -61,9 +64,7 @@ def target_dir(path: str, target_rel: str) -> str:
     return os.path.join(path, DV_DIR, target_rel)
 
 
-def encode_dv(
-    target_rel: str, positions: "np.ndarray", table: "str | None" = None,
-) -> bytes:
+def encode_dv(positions: "np.ndarray", table: "str | None" = None) -> bytes:
     """Serialize sorted unique uint64 row positions (zstd, the same
     codec surface the chunk pages use — format/compression.py).
 
@@ -77,10 +78,10 @@ def encode_dv(
     from olive_spark.format.compression import compress
 
     pos = np.unique(np.asarray(positions, dtype=np.uint64))
-    doc: dict = {"target": target_rel, "count": int(len(pos))}
+    doc: dict = {"count": int(len(pos))}
     if table is not None:
         doc["table"] = table
-    header = json.dumps(doc).encode()
+    header = json.dumps(doc, separators=(",", ":")).encode()
     payload = compress("zstd", pos.astype("<u8").tobytes())
     return _MAGIC + struct.pack("<I", len(header)) + header + payload
 

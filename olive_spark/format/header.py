@@ -17,6 +17,27 @@ Model parity map (reference src/header.zig):
 Extensions over the reference (flagged, SURVEY.md §4): per-page min/max
 stats on flat columns (``ArrayHeader.stats``) to drive page skipping, and
 file-level stats for file pruning. The reference stores none.
+
+Format version 2 adds lightweight per-page encodings. A buffer may carry
+``BufferMeta.encodings`` (JSON key ``"e"``): one descriptor per page, in
+page order, each one of
+
+    null                  plain: the page holds the buffer's own bytes
+    ["for", w, base]      frame of reference: one unsigned w-byte code per
+                          element, element = base + code (``base`` a JSON
+                          int in the logical type's range)
+    ["dict", w, n]        page dictionary: n distinct elements, then one
+                          unsigned w-byte code per element, element =
+                          dictionary[code]; on a binary column's
+                          ``lengths`` page the dictionary is n u32
+                          lengths and the ``data`` page holds the n
+                          values' bytes
+
+with ``w`` in {1, 2, 4, 8}.  A page is still compressed with its buffer's
+codec after encoding, and each page decodes on its own.  Version-1 files
+carry no descriptors and read unchanged; a version-1 header that carries
+one is rejected, and readers older than version 2 reject version-2 files
+as an unsupported version instead of misreading encoded pages.
 """
 
 from __future__ import annotations
@@ -28,7 +49,11 @@ from typing import Any, Optional
 from olive_spark.format.errors import ValidationError
 
 MAGIC = b"OLV1"
-FORMAT_VERSION = 1
+FORMAT_VERSION = 2
+READABLE_VERSIONS = (1, 2)
+
+# code widths (bytes) of "for" and "dict" page encodings
+ENCODING_WIDTHS = (1, 2, 4, 8)
 
 # Format invariants carried over from the reference (u32 offsets/sizes,
 # reference src/header.zig:35-39, src/write.zig:986-991; defensive read
@@ -79,13 +104,18 @@ class BufferMeta:
     compression: str
     pages: list[Page]
     row_index_ends: list[int]
+    # one descriptor per page (module docstring), or None: all plain
+    encodings: Optional[list[Optional[list]]] = None
 
     def to_json(self) -> dict[str, Any]:
-        return {
+        out = {
             "c": self.compression,
             "p": [p.to_json() for p in self.pages],
             "r": self.row_index_ends,
         }
+        if self.encodings is not None:
+            out["e"] = self.encodings
+        return out
 
     @staticmethod
     def from_json(j: Any) -> "BufferMeta":
@@ -102,7 +132,38 @@ class BufferMeta:
             raise ValidationError("row_index_ends/pages length mismatch")
         if any(b < a for a, b in zip(ends, ends[1:])):
             raise ValidationError("row_index_ends not monotone")
-        return BufferMeta(comp, pages, ends)
+        encs = j.get("e")
+        if encs is not None:
+            if not isinstance(encs, list) or len(encs) != len(pages):
+                raise ValidationError(
+                    f"page encodings must list one descriptor per page "
+                    f"({len(pages)}): {encs!r}"
+                )
+            for e in encs:
+                _validate_encoding(e)
+        return BufferMeta(comp, pages, ends, encs)
+
+
+def _validate_encoding(e: Any) -> None:
+    """Structural check of one page descriptor; the reader checks the
+    page's bytes against it (codes in range, base + code in the type)."""
+    if e is None:
+        return
+    if not (isinstance(e, list) and len(e) == 3 and e[0] in ("for", "dict")):
+        raise ValidationError(f"unknown page encoding {e!r}")
+    w, arg = e[1], e[2]
+    if type(w) is not int or w not in ENCODING_WIDTHS:
+        raise ValidationError(f"page encoding width must be one of {ENCODING_WIDTHS}: {e!r}")
+    if type(arg) is not int:
+        raise ValidationError(f"malformed page encoding {e!r}")
+    if e[0] == "dict" and not 0 < arg <= MAX_ARRAY_LEN:
+        raise ValidationError(f"bad page dictionary size in {e!r}")
+
+
+def _buffer_metas(h: "ArrayHeader"):
+    yield from h.buffers.values()
+    for c in h.children:
+        yield from _buffer_metas(c)
 
 
 @dataclass
@@ -293,13 +354,18 @@ class ChunkHeader:
         if not isinstance(j, dict):
             raise ValidationError("header JSON is not an object")
         v = j.get("v")
-        if v != FORMAT_VERSION:
+        if type(v) is not int or v not in READABLE_VERSIONS:
             raise ValidationError(f"unsupported format version {v!r}")
         dss = j.get("dss")
         if not (isinstance(dss, int) and 0 <= dss <= MAX_DATA_SECTION):
             raise ValidationError(f"bad data_section_size {dss!r}")
         tables = [TableHeader.from_json(t) for t in j.get("tables", [])]
         _validate_names([t.name for t in tables])
+        if v == 1 and any(
+            m.encodings is not None
+            for t in tables for f in t.fields for m in _buffer_metas(f)
+        ):
+            raise ValidationError("format version 1 carries no page encodings")
         d20 = j.get("dict20")
         d32 = j.get("dict32")
         return ChunkHeader(

@@ -15,6 +15,11 @@ Beyond the reference: column pruning (only requested columns' buffers are
 decompressed) and page-granular row skipping driven by the shared row grid
 + per-page min/max stats (SURVEY.md §4 — structurally enabled by the
 reference's ``row_index_ends``, src/header.zig:41-45).
+
+Pages stored with a frame-of-reference or page-dictionary encoding
+(format version 2) decode on their own after decompression
+(``encodings.py``); what a buffer's selected pages expand to is held to
+``MAX_BUFFER_BYTES`` before any is decoded.
 """
 
 from __future__ import annotations
@@ -26,6 +31,13 @@ import pyarrow as pa
 
 from olive_spark.format import buffers as B
 from olive_spark.format.compression import decompress
+from olive_spark.format.encodings import (
+    U32,
+    decode_dict_binary,
+    decode_fixed,
+    decode_for,
+    value_dtype,
+)
 from olive_spark.format.errors import (
     BufferTooBig,
     DataSectionTooSmall,
@@ -44,6 +56,11 @@ from olive_spark.format.header import (
     read_header,
 )
 from olive_spark.format.types import type_from_json
+
+
+def _join(parts: list) -> Any:
+    """Pages' bytes as one bytes-like object; one page passes uncopied."""
+    return b"".join(parts) if len(parts) != 1 else parts[0]
 
 
 def _buf(h: ArrayHeader, role: str) -> BufferMeta:
@@ -126,12 +143,88 @@ class ChunkReader:
         return out
 
     def _read_bytes(self, meta: BufferMeta, pages: Optional[Sequence[int]]) -> bytes:
-        return b"".join(self._read_pages(meta, pages))
+        """A plain buffer's selected pages, joined."""
+        if meta.encodings is not None:
+            raise ValidationError("page encodings on a buffer that takes none")
+        return _join(self._read_pages(meta, pages))
+
+    def _check_decoded(
+        self, meta: BufferMeta, pages: Optional[Sequence[int]], itemsize: int
+    ) -> tuple[Sequence[int], list[int]]:
+        """Hold an encoded buffer's selected pages, decoded to ``itemsize``
+        bytes a row, to ``MAX_BUFFER_BYTES`` before any is read: a narrow
+        code page expands up to 8×.  Returns the page indices and the
+        grid's page starts."""
+        idxs = range(len(meta.pages)) if pages is None else pages
+        starts = B.grid_starts(meta.row_index_ends)
+        rows = sum(meta.row_index_ends[i] - starts[i] for i in idxs)
+        if rows * itemsize > MAX_BUFFER_BYTES:
+            raise BufferTooBig(f"encoded buffer decodes past {MAX_BUFFER_BYTES} bytes")
+        return idxs, starts
+
+    def _read_fixed(
+        self,
+        meta: BufferMeta,
+        pages: Optional[Sequence[int]],
+        dt: Optional[np.dtype],
+        dict_ok: bool = False,
+    ) -> bytes:
+        """A fixed-width buffer's selected pages, each decoded by its own
+        encoding into elements of ``dt`` (None: the type takes none) and
+        joined; ``dict_ok`` admits page dictionaries."""
+        if meta.encodings is None:
+            return _join(self._read_pages(meta, pages))
+        if dt is None:
+            raise ValidationError("page encodings on a buffer that takes none")
+        idxs, starts = self._check_decoded(meta, pages, dt.itemsize)
+        out = []
+        for raw, i in zip(self._read_pages(meta, pages), idxs):
+            enc = meta.encodings[i]
+            if enc is None:
+                out.append(raw)
+            elif enc[0] == "dict" and not dict_ok:
+                raise ValidationError(f"{enc[0]!r} page on a buffer that takes none")
+            else:
+                rows = meta.row_index_ends[i] - starts[i]
+                out.append(decode_fixed(raw, enc, rows, dt))
+        return _join(out)
+
+    def _read_binary(
+        self, h: ArrayHeader, pages: Optional[Sequence[int]]
+    ) -> tuple[np.ndarray, bytes]:
+        """A binary column's selected pages → (u32 lengths, value bytes);
+        a buffer without descriptors reads as all-plain pages."""
+        lmeta, dmeta = _buf(h, "lengths"), _buf(h, "data")
+        if dmeta.encodings is not None:
+            raise ValidationError("page encodings on a binary data buffer")
+        idxs, starts = self._check_decoded(lmeta, pages, 4)
+        encs = lmeta.encodings or [None] * len(lmeta.pages)
+        lens, datas = [], []
+        for lraw, draw, i in zip(
+            self._read_pages(lmeta, pages), self._read_pages(dmeta, pages), idxs
+        ):
+            enc = encs[i]
+            rows = lmeta.row_index_ends[i] - starts[i]
+            if enc is None:
+                if len(lraw) != rows * 4:
+                    raise LengthMismatch("lengths page size mismatch")
+                lens.append(np.frombuffer(lraw, U32))
+            elif enc[0] == "for":
+                lens.append(decode_for(lraw, enc, rows, U32))
+            else:
+                lengths, draw = decode_dict_binary(lraw, draw, enc, rows)
+                lens.append(lengths)
+            datas.append(draw)
+        if len(lens) != 1:  # one page passes uncopied
+            lens = [np.concatenate(lens) if lens else np.zeros(0, U32)]
+        return lens[0], _join(datas)
 
     def _read_bitmap(
         self, meta: BufferMeta, pages: Optional[Sequence[int]], n: int
     ) -> np.ndarray:
         """Reassemble selected bitmap pages into one 0/1 bit array."""
+        if meta.encodings is not None:
+            raise ValidationError("page encodings on a bitmap buffer")
         chunks = self._read_pages(meta, pages)
         idxs = range(len(meta.pages)) if pages is None else pages
         starts = B.grid_starts(meta.row_index_ends)
@@ -200,8 +293,11 @@ class ChunkReader:
         vbuf, null_count = self._validity(h, pages, n)
 
         if tag == "primitive":
-            itemsize = dt.byte_width
-            raw = self._read_bytes(_buf(h, "values"), pages)
+            try:
+                itemsize = dt.byte_width
+            except ValueError:
+                raise UnexpectedArrayType(f"primitive header for {dt}") from None
+            raw = self._read_fixed(_buf(h, "values"), pages, value_dtype(dt), dict_ok=True)
             if len(raw) != n * itemsize:
                 raise LengthMismatch(
                     f"primitive buffer {len(raw)}B != {n}×{itemsize}B"
@@ -220,13 +316,11 @@ class ChunkReader:
                 if (pa.types.is_large_string(dt) or pa.types.is_large_binary(dt))
                 else np.int32
             )
-            lengths_raw = self._read_bytes(_buf(h, "lengths"), pages)
-            if len(lengths_raw) != n * 4:
+            lengths, data = self._read_binary(h, pages)
+            if len(lengths) != n:
                 raise LengthMismatch("lengths buffer size mismatch")
-            lengths = np.frombuffer(lengths_raw, np.uint32)
             offs = np.zeros(n + 1, dtype=np.int64)
             np.cumsum(lengths, out=offs[1:])
-            data = self._read_bytes(_buf(h, "data"), pages)
             if len(data) != int(offs[-1]):
                 raise LengthMismatch("binary data size != offsets extent")
             if odt is np.int32 and offs[-1] >= (1 << 31):
@@ -249,7 +343,7 @@ class ChunkReader:
             w = int(h.extra["width"])
             if not (pa.types.is_fixed_size_binary(dt) and dt.byte_width == w):
                 raise UnexpectedArrayType(f"dict_indices({w}) header for {dt}")
-            raw = self._read_bytes(_buf(h, "indices"), pages)
+            raw = self._read_fixed(_buf(h, "indices"), pages, U32)
             if len(raw) != n * 4:
                 raise LengthMismatch("dict index buffer size mismatch")
             idx = np.frombuffer(raw, np.uint32)
@@ -270,7 +364,7 @@ class ChunkReader:
         elif tag == "list":
             if not (pa.types.is_list(dt) or pa.types.is_large_list(dt)):
                 raise UnexpectedArrayType(f"list header for {dt}")
-            lengths_raw = self._read_bytes(_buf(h, "lengths"), pages)
+            lengths_raw = self._read_fixed(_buf(h, "lengths"), pages, U32)
             if len(lengths_raw) != n * 4:
                 raise LengthMismatch("list lengths buffer size mismatch")
             lengths = np.frombuffer(lengths_raw, np.uint32)
@@ -319,7 +413,7 @@ class ChunkReader:
         elif tag == "map":
             if not pa.types.is_map(dt):
                 raise UnexpectedArrayType(f"map header for {dt}")
-            lengths_raw = self._read_bytes(_buf(h, "lengths"), pages)
+            lengths_raw = self._read_fixed(_buf(h, "lengths"), pages, U32)
             if len(lengths_raw) != n * 4:
                 raise LengthMismatch("map lengths buffer size mismatch")
             lengths = np.frombuffer(lengths_raw, np.uint32)
@@ -408,6 +502,8 @@ class ChunkReader:
                 B.make_row_grid(th.num_rows, th.num_rows or 1), pages
             ) if pages is not None else th.num_rows
             return pa.table({}).add_column(0, "_dummy", pa.array([None] * 0))
+        if len({len(a) for a in arrays}) > 1:
+            raise LengthMismatch(f"columns of table {th.name!r} decode to different row counts")
         return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
 
 

@@ -11,6 +11,13 @@ Codec policy parity (SURVEY.md §2.1): primitive/bool/fsb values, lengths,
 validity, type metadata → lz4; var-width *data* → zstd (``balanced`` bias)
 or lz4_hc (``read_optimized``) (src/write.zig:802-811); dicts uncompressed.
 
+Page encodings (format version 2, ``encodings.py``): before its codec
+runs, each page of a fixed-width buffer, of u32 lengths or of binary data
+takes the smallest of plain, frame of reference (integers and lengths)
+and a page dictionary (integers, floats, strings, binary), chosen from
+that page's own data alone; the codec policy above is unchanged.  Stats
+and blooms are computed over logical values, before encoding.
+
 Deviations (our spec, documented in SURVEY.md §7): all buffers of a table
 share ONE row grid (page boundaries at common row indices, multiples of 8)
 so that page-granular row skipping lines up across columns; var-width
@@ -30,8 +37,15 @@ import pyarrow.compute as pc
 
 from olive_spark.format import buffers as B
 from olive_spark.format.compression import compress
+from olive_spark.format.encodings import (
+    encode_binary,
+    encode_fixed,
+    page_encodings,
+    value_dtype,
+)
 from olive_spark.format.errors import DataSectionOverflow, ValidationError
 from olive_spark.format.header import (
+    FORMAT_VERSION,
     MAX_DATA_SECTION,
     ArrayHeader,
     BufferMeta,
@@ -54,8 +68,10 @@ class _DataSection:
     def __init__(self) -> None:
         self.buf = bytearray()
 
-    def write_page(self, codec: str, raw: bytes) -> Page:
-        comp = compress(codec, bytes(raw))
+    def write_page(self, codec: str, raw: bytes, comp: Optional[bytes] = None) -> Page:
+        """Append one page; ``comp`` is ``raw`` already compressed."""
+        if comp is None:
+            comp = compress(codec, bytes(raw))
         off = len(self.buf)
         if off + len(comp) > MAX_DATA_SECTION:
             raise DataSectionOverflow(
@@ -118,16 +134,6 @@ def _collect_fsb_values(arr: pa.Array, ctx: _DictContext) -> None:
 def _fsb_values(arr: pa.Array, win_off: int, win_len: int, width: int) -> np.ndarray:
     raw = B.slice_fixed(arr.buffers()[1], width, arr.offset + win_off, win_len)
     return np.frombuffer(raw, dtype=np.dtype((np.void, width)))
-
-
-def _offsets_dtype(dt: pa.DataType):
-    if (
-        pa.types.is_large_list(dt)
-        or pa.types.is_large_binary(dt)
-        or pa.types.is_large_string(dt)
-    ):
-        return np.int64
-    return np.int32
 
 
 _STATS_OK = (
@@ -288,20 +294,36 @@ class ChunkWriter:
                 name, n, list(t.column_names), ftypes, fields, fids
             ))
 
-        header = ChunkHeader(1, theaders, dict20, dict32, len(out.buf))
+        header = ChunkHeader(FORMAT_VERSION, theaders, dict20, dict32, len(out.buf))
         return frame_file(header, bytes(out.buf))
 
     # ---- buffer emission -------------------------------------------------
 
     def _emit_fixed(
-        self, out: _DataSection, codec: str, data: memoryview, itemsize: int, grid: list[int]
+        self,
+        out: _DataSection,
+        data: memoryview,
+        itemsize: int,
+        grid: list[int],
+        dtype: Optional[np.dtype] = None,
+        valid: Optional[np.ndarray] = None,
+        dict_ok: bool = False,
     ) -> BufferMeta:
-        """Fixed-stride pager on the row grid (± reference src/write.zig:919-960)."""
-        pages = []
+        """Fixed-stride lz4 pager on the row grid (± reference
+        src/write.zig:919-960).  With ``dtype``, the elements' integer or
+        float dtype, each page is encoded first (``encodings.encode_fixed``);
+        ``valid`` marks the slots that are not null."""
+        pages, encs = [], []
         starts = B.grid_starts(grid)
         for a, b in zip(starts, grid):
-            pages.append(out.write_page(codec, bytes(data[a * itemsize : b * itemsize])))
-        return BufferMeta(codec, pages, list(grid))
+            raw = data[a * itemsize : b * itemsize]
+            enc = None
+            if dtype is not None and b > a:
+                v = None if valid is None else valid[a:b]
+                enc, raw = encode_fixed(np.frombuffer(raw, dtype), v, dict_ok)
+            pages.append(out.write_page("lz4", raw))
+            encs.append(enc)
+        return BufferMeta("lz4", pages, list(grid), page_encodings(encs))
 
     def _emit_bitmap(
         self, out: _DataSection, bits: np.ndarray, grid: list[int]
@@ -315,17 +337,35 @@ class ChunkWriter:
             pages.append(out.write_page("lz4", B.pack_bits(bits[a:b])))
         return BufferMeta("lz4", pages, list(grid))
 
-    def _emit_vardata(
-        self, out: _DataSection, codec: str, data: memoryview, offs: np.ndarray, grid: list[int]
-    ) -> BufferMeta:
-        """Row-boundary pager for var-width data
+    def _emit_binary(
+        self,
+        out: _DataSection,
+        arr: pa.Array,
+        data: memoryview,
+        offs: np.ndarray,
+        grid: list[int],
+    ) -> tuple[BufferMeta, BufferMeta]:
+        """Row-boundary pager for var-width data and its u32 lengths
         (± reference src/write.zig:861-917): pages close exactly on grid
-        row boundaries; row_index_ends records the end row per page."""
-        pages = []
+        row boundaries; row_index_ends records the end row per page.
+        ``arr`` is the column's window; each page is encoded by
+        ``encodings.encode_binary``."""
+        codec = self.data_codec
+        lengths = np.diff(offs).astype(np.uint32)
+        dpages, lpages, encs = [], [], []
         starts = B.grid_starts(grid)
         for a, b in zip(starts, grid):
-            pages.append(out.write_page(codec, bytes(data[int(offs[a]) : int(offs[b])])))
-        return BufferMeta(codec, pages, list(grid))
+            enc, lraw, draw, lcomp, dcomp = encode_binary(
+                arr.slice(a, b - a), lengths[a:b],
+                bytes(data[int(offs[a]) : int(offs[b])]), codec,
+            )
+            lpages.append(out.write_page("lz4", lraw, lcomp))
+            dpages.append(out.write_page(codec, draw, dcomp))
+            encs.append(enc)
+        return (
+            BufferMeta(codec, dpages, list(grid)),
+            BufferMeta("lz4", lpages, list(grid), page_encodings(encs)),
+        )
 
     def _page_stats(self, arr: pa.Array, win_off: int, grid: list[int]) -> Optional[dict]:
         if not self.collect_stats or not any(p(arr.type) for p in _STATS_OK):
@@ -386,13 +426,13 @@ class ChunkWriter:
             if ctx is not None and w in DICT_WIDTHS and w in ctx.sorted_vals:
                 vals = _fsb_values(arr, win_off, win_len, w)
                 idx = ctx.encode(w, vals, bits)
-                bufs["indices"] = self._emit_fixed(out, "lz4", memoryview(idx.tobytes()), 4, grid)
+                bufs["indices"] = self._emit_fixed(out, memoryview(idx).cast("B"), 4, grid, np.dtype(np.uint32))
                 return ArrayHeader(
                     "dict_indices", win_len, null_count, bufs,
                     extra={"width": w}, stats=stats,
                 )
             data = B.slice_fixed(arr.buffers()[1], w, abs_off, win_len)
-            bufs["data"] = self._emit_fixed(out, "lz4", data, w, grid)
+            bufs["data"] = self._emit_fixed(out, data, w, grid)
             return ArrayHeader(
                 "fixed_size_binary", win_len, null_count, bufs,
                 extra={"width": w}, stats=stats,
@@ -400,23 +440,23 @@ class ChunkWriter:
 
         if pa.types.is_string(dt) or pa.types.is_large_string(dt) \
                 or pa.types.is_binary(dt) or pa.types.is_large_binary(dt):
-            odt = _offsets_dtype(dt)
+            odt = B.offsets_dtype(dt)
             offs = B.normalized_offsets(arr.buffers()[1], odt, abs_off, win_len)
             raw0 = int(np.frombuffer(arr.buffers()[1], dtype=odt, count=1,
                                      offset=abs_off * odt().itemsize)[0])
             data = memoryview(arr.buffers()[2])[raw0 : raw0 + int(offs[-1])]
-            lengths = np.diff(offs).astype(np.uint32)
-            bufs["data"] = self._emit_vardata(out, self.data_codec, data, offs, grid)
-            bufs["lengths"] = self._emit_fixed(out, "lz4", memoryview(lengths.tobytes()), 4, grid)
+            bufs["data"], bufs["lengths"] = self._emit_binary(
+                out, arr.slice(win_off, win_len), data, offs, grid
+            )
             return ArrayHeader("binary", win_len, null_count, bufs, stats=stats)
 
         if pa.types.is_list(dt) or pa.types.is_large_list(dt):
-            odt = _offsets_dtype(dt)
+            odt = B.offsets_dtype(dt)
             offs = B.normalized_offsets(arr.buffers()[1], odt, abs_off, win_len)
             raw0 = int(np.frombuffer(arr.buffers()[1], dtype=odt, count=1,
                                      offset=abs_off * odt().itemsize)[0])
             lengths = np.diff(offs).astype(np.uint32)
-            bufs["lengths"] = self._emit_fixed(out, "lz4", memoryview(lengths.tobytes()), 4, grid)
+            bufs["lengths"] = self._emit_fixed(out, memoryview(lengths).cast("B"), 4, grid, np.dtype(np.uint32))
             cgrid = B.child_grid(offs, grid)
             child = arr.values
             ch = self._write_array(out, child, raw0 - child.offset, int(offs[-1]), cgrid, ctx)
@@ -444,7 +484,7 @@ class ChunkWriter:
             raw0 = int(np.frombuffer(arr.buffers()[1], dtype=np.int32, count=1,
                                      offset=abs_off * 4)[0])
             lengths = np.diff(offs).astype(np.uint32)
-            bufs["lengths"] = self._emit_fixed(out, "lz4", memoryview(lengths.tobytes()), 4, grid)
+            bufs["lengths"] = self._emit_fixed(out, memoryview(lengths).cast("B"), 4, grid, np.dtype(np.uint32))
             cgrid = B.child_grid(offs, grid)
             nchild = int(offs[-1])
             kch = self._write_array(out, arr.keys, raw0 - arr.keys.offset, nchild, cgrid, ctx)
@@ -462,7 +502,10 @@ class ChunkWriter:
         except Exception as exc:  # noqa: BLE001
             raise ValidationError(f"unsupported olive type {dt}") from exc
         data = B.slice_fixed(arr.buffers()[1], itemsize, abs_off, win_len)
-        bufs["values"] = self._emit_fixed(out, "lz4", data, itemsize, grid)
+        bufs["values"] = self._emit_fixed(
+            out, data, itemsize, grid, value_dtype(dt),
+            bits.astype(bool) if null_count else None, dict_ok=True,
+        )
         return ArrayHeader("primitive", win_len, null_count, bufs, stats=stats)
 
 

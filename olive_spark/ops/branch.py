@@ -340,7 +340,7 @@ def _stage_branch_dvs(positions_df, fc: str, pc: str, path: str,
         dv_rel = _os.path.join(_BRANCH_DIR, name, "_dv", f"{run}-{key}.dv")
         dest = _os.path.join(path, dv_rel)
         _os.makedirs(_os.path.dirname(dest), exist_ok=True)
-        blob = _D.encode_dv(rel, pdf[pc].to_numpy(_np.uint64), table=table)
+        blob = _D.encode_dv(pdf[pc].to_numpy(_np.uint64), table=table)
         tmp = dest + ".tmp"
         with open(tmp, "wb") as f:
             f.write(blob)
@@ -558,9 +558,10 @@ def _finish_publish(path: str, txn: dict) -> None:
             # a not-yet-renamed chunk is an invisible orphan, while a
             # renamed chunk briefly missing its DV would expose deleted
             # rows to directory-authority scans.  Branch-file DVs are
-            # re-encoded against their published target name; base-file
-            # DVs move as-is.  Idempotent: dst-exists skips.
-            for src_dv, final_target, final_dv in txn.get("dv_moves", ()):
+            # re-encoded (older ones name their branch-side target in the
+            # header); base-file DVs move as-is.  Idempotent: dst-exists
+            # skips.
+            for src_dv, _target, final_dv in txn.get("dv_moves", ()):
                 src = os.path.join(bdir, src_dv)
                 dst = os.path.join(path, final_dv)
                 if os.path.exists(dst):
@@ -577,8 +578,7 @@ def _finish_publish(path: str, txn: dict) -> None:
                 from olive_spark.format import deletion as _D
 
                 blob = _D.encode_dv(
-                    final_target, _D.read_positions(src),
-                    table=txn.get("table"),
+                    _D.read_positions(src), table=txn.get("table")
                 )
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 with open(dst + ".tmp2", "wb") as f:

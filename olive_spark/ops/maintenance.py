@@ -2452,9 +2452,7 @@ def _stage_dvs(
                 dv_rel = _os.path.join(_D.DV_DIR, rel, f"{run}.dv")
                 dest = _os.path.join(path, dv_rel) + ".staging"
                 _os.makedirs(_os.path.dirname(dest), exist_ok=True)
-                blob = _D.encode_dv(
-                    rel, pos.astype(_np.uint64), table=table
-                )
+                blob = _D.encode_dv(pos.astype(_np.uint64), table=table)
                 with open(dest, "wb") as f:
                     f.write(blob)
             out_f.append(rel)

@@ -25,8 +25,9 @@ from __future__ import annotations
 import os
 
 CACHE_ROOT = "/tmp/olive_cache"
-CACHE_VERSION = "v13"  # bump when derived-table definitions change
+CACHE_VERSION = "v14"  # bump when derived-table definitions change
 # v13: text_index postings gained tf/dl columns + n_tokens meta (BM25)
+# v14: format version 2 (per-page encodings): rebuild with the new writer
 N_CHUNKS = 16  # files per table = scan parallelism floor (real clusters
 MIN_CHUNK_ROWS = 256  # get this for free from many-file layouts)
 TABLES = (

@@ -3114,7 +3114,9 @@ def _ensure_orders_dv_gc(spark: SparkSession, sf: str) -> str:
         base = data.load(
             spark, sf, "orders", columns=["o_orderkey", "o_totalprice"]
         )
-        base.coalesce(2).write.format("olive") \
+        # repartition, not coalesce: the scan's width follows the cached
+        # files' bytes and may be one partition, but GC needs 2 files
+        base.repartition(2).write.format("olive") \
             .option("table", "orders_dv_gc").mode("append").save(out)
         r = delete_where(
             spark, out, "o_orderkey % 3 = 0", table="orders_dv_gc",

@@ -59,12 +59,32 @@ def test_dv_roundtrip_and_header_count(tmp_path):
     from olive_spark.format import deletion as D
 
     pos = np.array([5, 1, 99, 5, 1_000_000], dtype=np.uint64)
-    blob = D.encode_dv("part-x.olive", pos)
+    blob = D.encode_dv(pos)
     fp = tmp_path / "a.dv"
     fp.write_bytes(blob)
     assert D.read_count(str(fp)) == 4  # deduped
     got = D.read_positions(str(fp))
     assert got.tolist() == [1, 5, 99, 1_000_000]
+
+
+def test_dv_with_target_field_reads_unchanged(tmp_path):
+    # DVs written before the header dropped the (directory-implied)
+    # target file name still read, table scoping included
+    import json
+    import struct
+
+    from olive_spark.format import deletion as D
+    from olive_spark.format.compression import compress
+
+    head = json.dumps(
+        {"target": "part-00000-x.olive", "count": 2, "table": "ta"}
+    ).encode()
+    payload = compress("zstd", np.array([3, 8], "<u8").tobytes())
+    fp = tmp_path / "old.dv"
+    fp.write_bytes(b"ODV1" + struct.pack("<I", len(head)) + head + payload)
+    assert D.read_count(str(fp)) == 2
+    assert D.read_positions(str(fp)).tolist() == [3, 8]
+    assert D.dv_applies_to(str(fp), "ta") and not D.dv_applies_to(str(fp), "tb")
 
 
 def test_dv_hostile_bytes(tmp_path):
@@ -76,7 +96,7 @@ def test_dv_hostile_bytes(tmp_path):
     with pytest.raises(OliveError):
         D.read_count(str(fp))
     # count/payload mismatch fails loud, never a silent partial mask
-    good = D.encode_dv("t", np.array([1, 2, 3], dtype=np.uint64))
+    good = D.encode_dv(np.array([1, 2, 3], dtype=np.uint64))
     fp2 = tmp_path / "trunc.dv"
     fp2.write_bytes(good[:-3])
     with pytest.raises(Exception):
@@ -342,7 +362,7 @@ def test_crash_recovery_activates_staged_dvs(spark, tmp_path):
     stag = os.path.join(str(path), dv_rel) + ".staging"
     os.makedirs(os.path.dirname(stag), exist_ok=True)
     with open(stag, "wb") as f:
-        f.write(D.encode_dv(rel, np.array([0, 1], dtype=np.uint64)))
+        f.write(D.encode_dv(np.array([0, 1], dtype=np.uint64)))
     man = os.path.join(str(path), "compact-deadbeef.manifest.json")
     with open(man, "w") as f:
         json.dump({
@@ -815,7 +835,7 @@ def test_dv_table_scoped_in_multi_table_chunk(spark, tmp_path):
     dv_dir = path / D.DV_DIR / "chunk-0.olive"
     dv_dir.mkdir(parents=True)
     (dv_dir / "x.dv").write_bytes(
-        D.encode_dv("chunk-0.olive", np.arange(5), table="ta")
+        D.encode_dv(np.arange(5), table="ta")
     )
     ta = _scan(spark, path, table="ta").collect()
     tb = _scan(spark, path, table="tb").collect()
@@ -824,7 +844,7 @@ def test_dv_table_scoped_in_multi_table_chunk(spark, tmp_path):
     assert sorted(r["id"] for r in tb) == list(range(100, 110))
     # legacy DV without a table field applies to any table (pre-r11)
     (dv_dir / "x.dv").write_bytes(
-        D.encode_dv("chunk-0.olive", np.arange(2))
+        D.encode_dv(np.arange(2))
     )
     tb2 = _scan(spark, path, table="tb").collect()
     assert sorted(r["id"] for r in tb2) == list(range(102, 110))
@@ -845,7 +865,7 @@ def test_count_rows_ignores_orphan_dvs(spark, tmp_path):
     orphan = os.path.join(path, D.DV_DIR, "gone.olive")
     os.makedirs(orphan, exist_ok=True)
     with open(os.path.join(orphan, "o.dv"), "wb") as f:
-        f.write(D.encode_dv("gone.olive", np.arange(50)))
+        f.write(D.encode_dv(np.arange(50)))
     scan_n = _scan(spark, path).count()
     assert scan_n == 390
     assert count_rows(path) == 390  # orphan skipped

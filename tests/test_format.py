@@ -425,3 +425,163 @@ def test_header_declared_length_mismatch_rejected():
     hb = json.dumps(h).encode()
     with pytest.raises(OliveError, match="decoded 100 rows"):
         read_all_tables(b"OLV1" + struct.pack("<I", len(hb)) + hb + data)
+
+
+# --------------------------------------------- page encodings (format v2)
+
+
+def _page_encodings(blob: bytes, col: str, role: str = "values"):
+    th = ChunkReader(blob).header.tables[0]
+    return th.fields[th.field_names.index(col)].buffers[role].encodings
+
+
+def test_for_range_comes_from_valid_slots_only():
+    n = 200
+    vals = np.arange(n, dtype=np.int64) + 1_000_000
+    valid = np.ones(n, bool)
+    valid[::7] = valid[3::7] = False
+    vals[::7] = np.iinfo(np.int64).min  # garbage under the nulls
+    vals[3::7] = np.iinfo(np.int64).max
+    arr = pa.Array.from_buffers(
+        pa.int64(), n,
+        [pa.py_buffer(np.packbits(valid, bitorder="little")), pa.py_buffer(vals)],
+    )
+    blob = write_chunk({"t": pa.table({"x": arr})})
+    assert _page_encodings(blob, "x") == [["for", 1, 1_000_001]]
+    assert read_chunk(blob).column("x").chunk(0).equals(arr)
+
+
+@pytest.mark.parametrize(
+    "dtype,lo,hi,enc",
+    [
+        (pa.int64(), -(2**63), -(2**63) + 200, ["for", 1, -(2**63)]),
+        (pa.int64(), 2**63 - 70_000, 2**63 - 1, ["for", 4, 2**63 - 70_000]),
+        (pa.int64(), -(2**63), 2**63 - 1, None),
+        (pa.uint64(), 2**64 - 300, 2**64 - 1, ["for", 2, 2**64 - 300]),
+        (pa.uint64(), 2**63 + 1, 2**63 + 9, ["for", 1, 2**63 + 1]),
+        (pa.uint64(), 0, 2**63 + 5, None),
+        (pa.int32(), -(2**31), -(2**31) + 40_000, ["for", 2, -(2**31)]),
+        (pa.int32(), -(2**31), 2**31 - 1, None),
+        (pa.timestamp("us"), -5, 2**31, ["for", 4, -5]),
+        (pa.duration("ns"), -(2**40), 2**40, None),
+    ],
+)
+def test_for_full_range_pages_use_unsigned_arithmetic(dtype, lo, hi, enc):
+    # 40 rows: below the dictionary trial, so FOR or plain decides alone
+    vals = [lo + (hi - lo) * i // 39 for i in range(40)]
+    arr = pa.array(vals[::-1], dtype)
+    blob = write_chunk({"t": pa.table({"x": arr})})
+    assert _page_encodings(blob, "x") == (None if enc is None else [enc])
+    assert read_chunk(blob).column("x").chunk(0).equals(arr)
+
+
+def test_float_page_dictionary_is_bit_exact():
+    def pool(ft, ut, nan_payloads):
+        nans = np.array(nan_payloads, ut).view(ft)
+        return np.concatenate([np.array([0.0, -0.0, np.inf, -np.inf, 1.5], ft), nans])
+
+    pick = np.random.default_rng(0).integers(0, 8, 300)
+    t = pa.table({
+        "f64": pool(np.float64, np.uint64,
+                    [0x7FF8000000000000, 0x7FF8000000000001, 0xFFF0000000000123])[pick],
+        "f32": pool(np.float32, np.uint32, [0x7FC00000, 0x7FC00001, 0xFF800123])[pick],
+    })
+    blob = write_chunk({"t": t})
+    got = read_chunk(blob)
+    for col, u in (("f64", np.uint64), ("f32", np.uint32)):
+        assert _page_encodings(blob, col)[0][0] == "dict"
+        bits = [np.frombuffer(x.column(col).chunk(0).buffers()[1], u) for x in (got, t)]
+        assert np.array_equal(bits[0], bits[1])
+
+
+def test_page_subset_reads_across_encodings():
+    rng = np.random.default_rng(1)
+    x = np.concatenate([
+        np.arange(64) + 10**12,                   # frame of reference, 1 byte
+        rng.choice([5, 10**15, -(10**15)], 64),   # page dictionary
+        rng.integers(-(2**62), 2**62, 64),        # plain
+        rng.integers(0, 60_000, 64) - 7,          # frame of reference, 2 bytes
+    ])
+    words = np.array(["ab", "cdefgh", "ijk", "lmnopqrstu"])
+    s = np.concatenate([
+        [f"row{i}" for i in range(64)],
+        words[rng.integers(0, 4, 64)],
+        words[rng.integers(0, 2, 64)],
+        [f"{i}" * (i % 5) for i in range(64)],
+    ])
+    t = pa.table({
+        "x": x,
+        "s": pa.array(s, mask=np.arange(256) % 13 == 0),
+        "f": pa.array(rng.choice([0.5, 0.25], 256), mask=np.arange(256) % 5 == 0),
+    })
+    blob = write_chunk({"t": t}, page_rows=64)
+    assert [e and e[:2] for e in _page_encodings(blob, "x")] == [
+        ["for", 1], ["dict", 1], None, ["for", 2]
+    ]
+    r = ChunkReader(blob)
+    assert_tables_equal(r.read_table(), t)
+    for pages in ([0], [1], [2], [3], [1, 3], [0, 2], [0, 1, 2, 3]):
+        want = pa.concat_tables([t.slice(64 * p, 64) for p in pages])
+        assert r.read_table(pages=pages).equals(want.combine_chunks())
+
+
+def test_encoded_nested_sliced_empty_and_one_row_pages():
+    rng = np.random.default_rng(2)
+    n = 301
+    lens = rng.integers(0, 4, n)
+    t = pa.table({
+        "l": pa.ListArray.from_arrays(
+            np.concatenate([[0], np.cumsum(lens)]).astype(np.int32),
+            pa.array(rng.integers(1000, 1100, int(lens.sum())), pa.int64()),
+        ),
+        "st": pa.StructArray.from_arrays(
+            [
+                pa.array(rng.integers(-50, 50, n), pa.int32()),
+                pa.array(np.array(["red", "green", "blue"])[rng.integers(0, 3, n)]),
+                pa.array(rng.choice([1.0, 2.5, -0.0], n)),
+            ],
+            ["a", "b", "c"],
+            mask=pa.array(np.arange(n) % 17 == 0),
+        ),
+        "m": pa.array(
+            [[(f"k{i % 3}", i % 7)] * (i % 3) for i in range(n)],
+            pa.map_(pa.string(), pa.int64()),
+        ),
+        "d": pa.array(rng.integers(18000, 18100, n).astype(np.int32), pa.date32()),
+    })
+    th = ChunkReader(write_chunk({"t": t})).header.tables[0]
+    child = th.fields[0].children[0]
+    assert child.buffers["values"].encodings == [["for", 1, 1000]]
+    assert th.fields[0].buffers["lengths"].encodings[0][0] == "for"
+    assert th.fields[1].children[0].buffers["values"].encodings[0][0] == "for"
+    for sl in (t, t.slice(37, 200), t.slice(0, 65), t.slice(300, 1), t.slice(5, 0)):
+        for page_rows in (64, 65536):
+            assert_tables_equal(roundtrip({"t": sl}, page_rows=page_rows)["t"], sl)
+
+
+def _v1_table() -> pa.Table:
+    n = 100
+    return pa.table({
+        "i64": pa.array([i * 7 - 300 if i % 9 else None for i in range(n)], pa.int64()),
+        "d": pa.array([18000 + i % 30 for i in range(n)], pa.date32()),
+        "f": pa.array([(i % 5) / 4 for i in range(n)], pa.float64()),
+        "s": pa.array([["air", "rail", "truck by road"][i % 3] if i % 11 else None
+                       for i in range(n)]),
+        "l": pa.array([[i, i + 1] if i % 4 else [] for i in range(n)], pa.list_(pa.int32())),
+        "st": pa.array([{"a": i % 3, "b": f"x{i % 4}"} for i in range(n)],
+                       pa.struct([("a", pa.int16()), ("b", pa.string())])),
+        "h": pa.array([bytes([i % 5]) * 20 for i in range(n)], pa.binary(20)),
+    })
+
+
+def test_reads_committed_format_v1_file():
+    # written by the version-1 writer (before page encodings) from
+    # _v1_table() with page_rows=64
+    import os
+
+    with open(os.path.join(os.path.dirname(__file__), "data", "format_v1.olive"), "rb") as f:
+        blob = f.read()
+    r = ChunkReader(blob)
+    assert r.header.version == 1
+    assert_tables_equal(r.read_table(), _v1_table())
+    assert r.read_table(pages=[1]).equals(_v1_table().slice(64).combine_chunks())

@@ -9,22 +9,51 @@ dict_indices paths), ``"size"`` (fixed_size_list path), or ``"ch"``
 the dispatch with a bare KeyError / IndexError instead of an OliveError.
 
 The mini-fuzz runs 10,000 seeded random bit-flips over a corpus of base
-chunks covering every array tag and asserts zero escapes.
+chunks covering every array tag and every page encoding (frame of
+reference at each width a page takes, page dictionaries of ints, floats
+and strings, narrowed lengths) and asserts zero escapes.  The encoding
+cases forge descriptors and pages that a writer never emits: unknown
+names, out-of-set widths, dictionary codes past the dictionary, bases
+whose codes overflow the type, descriptor/page count mismatches,
+descriptors in a version-1 header, and narrow codes that claim more rows
+than a buffer may decode to.
 """
 
 from __future__ import annotations
 
+import json
 import random
 
+import numpy as np
 import pyarrow as pa
 import pytest
 
-from olive_spark.format import OliveError, read_chunk, write_chunk
+from olive_spark.format import (
+    BufferTooBig,
+    OliveError,
+    ValidationError,
+    read_chunk,
+    write_chunk,
+)
+from olive_spark.format.compression import compress
+from olive_spark.format.header import (
+    MAX_BUFFER_BYTES,
+    ArrayHeader,
+    BufferMeta,
+    ChunkHeader,
+    Page,
+    TableHeader,
+    frame_file,
+)
+from olive_spark.format.types import type_to_json
 
 
 def _base_tables() -> dict[str, pa.Table]:
-    """One chunk whose header exercises every array tag."""
-    n = 16
+    """One chunk whose header exercises every array tag and page
+    encoding (64 rows: enough for the page-dictionary trial)."""
+    n = 64
+    rng = np.random.default_rng(7)
+    words = np.array(["".join(rng.choice(list("abcdefgh"), k)) for k in (9, 23, 41, 60)])
     emb = pa.array(
         [[float(i), float(i + 1), 0.5, -1.0] for i in range(n)],
         pa.list_(pa.float32(), 4),
@@ -44,9 +73,14 @@ def _base_tables() -> dict[str, pa.Table]:
             pa.array([[(f"k{i}", i)] for i in range(n)],
                      pa.map_(pa.string(), pa.int32())),
             pa.nulls(n, pa.null()),
+            pa.array(rng.integers(0, 50_000, n) * 1_000 + 7, pa.int64()),
+            pa.array(rng.integers(-(2**60), 2**60, n) % 60_000, pa.int64()),
+            pa.array(rng.choice([-(2**61), 3, 2**61], n), pa.int64()),
+            pa.array(rng.choice([0.1, -0.0, float("nan")], n), pa.float64()),
+            pa.array(words[rng.integers(0, 4, n)]),
         ],
         names=["i", "flag", "s", "fsb3", "fsb20", "fsb32", "lst", "emb",
-               "st", "mp", "nul"],
+               "st", "mp", "nul", "for4", "for2", "dint", "dflt", "dstr"],
     )
     return {"t": t}
 
@@ -129,6 +163,17 @@ def test_hostile_children_empty_header() -> None:
             ArrayHeader.from_json(j)
 
 
+def test_primitive_tag_on_var_width_column() -> None:
+    # a forged "primitive" tag on a string column used to escape as
+    # pyarrow's ValueError from the type's byte width
+    def edit(j):
+        j["tables"][0]["fields"][0]["t"] = "primitive"
+
+    blob = write_chunk({"t": pa.table({"s": ["a", "b"]})})
+    with pytest.raises(OliveError):
+        read_chunk(_edit_header(blob, edit))
+
+
 def test_minifuzz_10k_bitflips(blob: bytes) -> None:
     """10,000 seeded random 1-4 bit flips across the whole chunk
     (header JSON + data section): zero crashes allowed."""
@@ -149,3 +194,115 @@ def test_minifuzz_10k_bitflips(blob: bytes) -> None:
             if len(escapes) >= 5:
                 break
     assert not escapes, f"fuzz escapes: {escapes}"
+
+
+# ---- page encodings: forged descriptors and pages --------------------------
+
+
+def _edit_header(blob: bytes, edit) -> bytes:
+    """Re-frame ``blob`` with its header JSON changed by ``edit(j)``."""
+    hlen = int.from_bytes(blob[4:8], "little")
+    j = json.loads(blob[8 : 8 + hlen])
+    edit(j)
+    hb = json.dumps(j).encode()
+    return blob[:4] + len(hb).to_bytes(4, "little") + hb + blob[8 + hlen :]
+
+
+def _encoded_buffers(j: dict):
+    """Every buffer JSON of the header that carries page descriptors."""
+    stack = [f for t in j["tables"] for f in t["fields"]]
+    while stack:
+        h = stack.pop()
+        stack.extend(h.get("ch", []))
+        yield from (b for b in h.get("b", {}).values() if "e" in b)
+
+
+def _forge(dt: pa.DataType, payload: bytes, enc: list, rows: int) -> bytes:
+    """A one-column chunk whose single values page is ``payload`` under
+    descriptor ``enc`` — bytes no writer would emit."""
+    comp = compress("lz4", payload)
+    buf = BufferMeta("lz4", [Page(0, len(payload), len(comp))], [rows], [enc])
+    th = TableHeader(
+        "t", rows, ["x"], [type_to_json(dt)],
+        [ArrayHeader("primitive", rows, 0, {"values": buf})],
+    )
+    return frame_file(ChunkHeader(2, [th], None, None, len(comp)), comp)
+
+
+def test_forged_pages_decode_or_raise_typed() -> None:
+    codes = bytes([0, 3, 1])
+    assert read_chunk(_forge(pa.int32(), codes, ["for", 1, -5], 3)).column(0).to_pylist() == [-5, -2, -4]
+    dict_page = np.array([10, 20], np.int64).tobytes()
+    assert read_chunk(_forge(pa.int64(), dict_page + bytes([1, 0, 1]), ["dict", 1, 2], 3)) \
+        .column(0).to_pylist() == [20, 10, 20]
+    hostile = {
+        "dictionary code past the dictionary": (
+            pa.int64(), dict_page + bytes([0, 2, 1]), ["dict", 1, 2]),
+        "base + code overflows int32": (pa.int32(), bytes([0, 200, 9]), ["for", 1, 2**31 - 100]),
+        "base below int64": (pa.int64(), codes, ["for", 1, -(2**63) - 1]),
+        "base above uint64": (pa.uint64(), codes, ["for", 1, 2**64]),
+        "frame of reference on floats": (pa.float64(), codes, ["for", 1, 0]),
+        "page shorter than its codes": (pa.int64(), dict_page + bytes([0]), ["dict", 1, 2]),
+        "encoding on a type that takes none": (pa.decimal128(5, 2), codes, ["for", 1, 0]),
+    }
+    for why, (dt, payload, enc) in hostile.items():
+        with pytest.raises(OliveError):
+            read_chunk(_forge(dt, payload, enc, 3))
+            pytest.fail(why)
+
+
+def test_encoded_pages_held_to_buffer_cap() -> None:
+    # a few bytes of 1-byte codes that claim 2^28 + 8 int64 rows, or
+    # 2^29 + 8 u32 string lengths, would decode past MAX_BUFFER_BYTES: the
+    # reader refuses before it decompresses or allocates anything
+    rows = (MAX_BUFFER_BYTES >> 3) + 8
+    with pytest.raises(BufferTooBig):
+        read_chunk(_forge(pa.int64(), bytes(8), ["for", 1, 0], rows))
+    rows = (MAX_BUFFER_BYTES >> 2) + 8
+    comp = compress("lz4", bytes(8))
+    lengths = BufferMeta("lz4", [Page(0, 8, len(comp))], [rows], [["for", 1, 0]])
+    data = BufferMeta("zstd", [Page(len(comp), 0, 0)], [rows])
+    th = TableHeader(
+        "t", rows, ["s"], [type_to_json(pa.string())],
+        [ArrayHeader("binary", rows, 0, {"lengths": lengths, "data": data})],
+    )
+    with pytest.raises(BufferTooBig):
+        read_chunk(frame_file(ChunkHeader(2, [th], None, None, len(comp)), comp))
+
+
+def _set_first(key_fn):
+    def edit(j):
+        key_fn(next(_encoded_buffers(j)))
+    return edit
+
+
+@pytest.mark.parametrize("case", [
+    "unknown_name", "width_3", "width_16", "width_bool", "count_mismatch",
+    "dict_size_zero", "v1_with_descriptors",
+])
+def test_malformed_descriptors_rejected(blob: bytes, case: str) -> None:
+    edits = {
+        "unknown_name": _set_first(lambda b: b["e"][0].__setitem__(0, "delta")),
+        "width_3": _set_first(lambda b: b["e"][0].__setitem__(1, 3)),
+        "width_16": _set_first(lambda b: b["e"][0].__setitem__(1, 16)),
+        "width_bool": _set_first(lambda b: b["e"][0].__setitem__(1, True)),
+        "count_mismatch": _set_first(lambda b: b["e"].append(None)),
+        "dict_size_zero": lambda j: next(
+            b for b in _encoded_buffers(j) if b["e"][0][0] == "dict"
+        )["e"][0].__setitem__(2, 0),
+        "v1_with_descriptors": lambda j: j.__setitem__("v", 1),
+    }
+    with pytest.raises(ValidationError):
+        read_chunk(_edit_header(blob, edits[case]))
+
+
+def test_descriptor_on_plain_only_buffer_rejected(blob: bytes) -> None:
+    def edit(j):
+        fields = j["tables"][0]["fields"]
+        for f in fields:  # the bool column's values bitmap, the fsb3 data
+            for role in ("values", "data"):
+                b = f.get("b", {}).get(role)
+                if f["t"] in ("bool", "fixed_size_binary") and b is not None:
+                    b["e"] = [["for", 1, 0]] * len(b["p"])
+    with pytest.raises(ValidationError):
+        read_chunk(_edit_header(blob, edit))
