@@ -24,8 +24,9 @@ Options:
     columns          comma-separated column pruning list (set automatically
                      by olive_spark.queries helpers; Spark's Python DS API
                      has no required-columns pushdown yet)
-    compressionBias  "balanced" (zstd data) | "read_optimized" (lz4_hc)
-                     (reference src/write.zig:30-33)
+    compressionBias  "balanced" (zstd on every page) | "read_optimized"
+                     (lz4, lz4_hc on var-width data; reference
+                     src/write.zig:30-33)
     pageRows         rows per page / skipping granularity (default 65536)
     chunkRows        max rows per output file (default 1 << 20)
     dictEncode       "true"/"false" — global fsb20/32 dict (default true)

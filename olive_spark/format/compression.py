@@ -9,6 +9,12 @@ We back them with pyarrow's bundled codecs (no extra wheels in this
 environment): "lz4" → LZ4 frame, "lz4_hc" → LZ4 frame at a high level
 (equivalent read path — one decompressor handles both, as with upstream
 LZ4), "zstd" → zstd level 1.
+
+Which pages take which codec is the writer's policy (``writer.py``):
+zstd on every page under the default ``balanced`` bias, lz4 with lz4_hc
+on var-width data under ``read_optimized``.  The codec is recorded per
+buffer and the reader decompresses by it, so any codec reads on any
+buffer.
 """
 
 from __future__ import annotations

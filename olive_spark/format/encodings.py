@@ -19,9 +19,12 @@ alone:
   more whose sampled distinct count predicts it beats the other
   candidates, since a trial costs a hash pass over the page.
 
-Fixed-width candidates all compress with lz4 and are compared by encoded
-size.  Binary candidates are compared compressed: plain var-width data is
-entropy-coded by zstd, dictionary codes are not.
+Fixed-width candidates are compared by encoded size; the codec the
+writer's bias picks (zstd under ``balanced``, lz4 under
+``read_optimized``) then runs on the winner.  Binary candidates are
+compared compressed, lengths or codes under that same codec and value
+bytes under the data codec, since the codec can undo much of what a
+dictionary saves on the value bytes.
 
 Decoding is vectorised numpy/pyarrow, one page at a time.  A dictionary
 code at or past the dictionary's size, a base plus code outside the
@@ -179,22 +182,24 @@ def _dict_binary(page: pa.Array, data_bytes: int, best: int):
     return ["dict", w, n], dlens.tobytes() + codes.tobytes(), ddata
 
 
-def encode_binary(page: pa.Array, lens: np.ndarray, data: bytes, codec: str):
+def encode_binary(
+    page: pa.Array, lens: np.ndarray, data: bytes, lens_codec: str, data_codec: str
+):
     """One page of a binary column, its u32 ``lens`` and value bytes
     ``data`` → ``(descriptor, lengths payload, data payload, compressed
     lengths or None, compressed data or None)``.  The page stores either
     its values (lengths by frame of reference when that narrows them) or
-    a page dictionary, whichever compresses smaller (lengths with lz4,
-    data with ``codec``); the compressed payloads are returned when the
-    comparison made them."""
+    a page dictionary, whichever compresses smaller (lengths or codes with
+    ``lens_codec``, data with ``data_codec``); the compressed payloads are
+    returned when the comparison made them."""
     enc, lraw = (len(lens) and for_page(lens, lens, None)) or (None, lens.tobytes())
-    # equal lengths compress to nothing, and zstd codes the values
-    # themselves tighter than a dictionary's byte codes would
+    # equal lengths compress to nothing, and values of one width compress
+    # well as they are
     if len(lens) >= DICT_MIN_ROWS and lens.min() != lens.max():
         cand = _dict_binary(page, len(data), len(data) + len(lraw))
         if cand is not None:
-            comp = compress("lz4", lraw), compress(codec, data)
-            ccomp = compress("lz4", cand[1]), compress(codec, cand[2])
+            comp = compress(lens_codec, lraw), compress(data_codec, data)
+            ccomp = compress(lens_codec, cand[1]), compress(data_codec, cand[2])
             if len(ccomp[0]) + len(ccomp[1]) < len(comp[0]) + len(comp[1]):
                 return (*cand, *ccomp)
             return (enc, lraw, data, *comp)

@@ -7,16 +7,25 @@ array writer (src/write.zig:114-232) that canonicalizes physical-only
 encodings and emits paged, per-buffer-compressed buffers into one
 contiguous data section with a monotone cursor (src/write.zig:982-993).
 
-Codec policy parity (SURVEY.md §2.1): primitive/bool/fsb values, lengths,
-validity, type metadata → lz4; var-width *data* → zstd (``balanced`` bias)
-or lz4_hc (``read_optimized``) (src/write.zig:802-811); dicts uncompressed.
+Codec policy: one codec per bias; the global dicts stay uncompressed.
+``read_optimized`` keeps the reference's split (SURVEY.md §2.1,
+src/write.zig:802-811): primitive/bool/fsb values and their page codes,
+lengths and validity → lz4, var-width *data* → lz4_hc.  ``balanced``
+deviates from the reference, which gives lz4 to everything but
+var-width data: here every page is zstd level 1 (src/compression.zig:23).
+The reference's fixed-width pages hold plain values; ours hold
+frame-of-reference and dictionary codes of a byte or two, whose
+remaining redundancy is in their value frequencies, which lz4 has no
+entropy coder to remove (perfbench lineitem 13.10 → 10.53 MB,
+``tools/probe_encoding.py``).  The codec is recorded per buffer, so
+every version-2 reader reads either bias.
 
 Page encodings (format version 2, ``encodings.py``): before its codec
 runs, each page of a fixed-width buffer, of u32 lengths or of binary data
 takes the smallest of plain, frame of reference (integers and lengths)
 and a page dictionary (integers, floats, strings, binary), chosen from
-that page's own data alone; the codec policy above is unchanged.  Stats
-and blooms are computed over logical values, before encoding.
+that page's own data alone.  Stats and blooms are computed over logical
+values, before encoding.
 
 Deviations (our spec, documented in SURVEY.md §7): all buffers of a table
 share ONE row grid (page boundaries at common row indices, multiples of 8)
@@ -217,8 +226,12 @@ class ChunkWriter:
         if compression_bias not in ("balanced", "read_optimized"):
             raise ValidationError(f"bad compression bias {compression_bias!r}")
         self.page_rows = page_rows
-        # reference src/write.zig:30-33,805-808
-        self.data_codec = "zstd" if compression_bias == "balanced" else "lz4_hc"
+        # one codec per bias: zstd on every page under "balanced"; the
+        # reference's lz4 / lz4_hc split under "read_optimized"
+        # (src/write.zig:30-33,802-811)
+        balanced = compression_bias == "balanced"
+        self.data_codec = "zstd" if balanced else "lz4_hc"
+        self.fixed_codec = "zstd" if balanced else "lz4"
         self.dict_encode = dict_encode
         self.collect_stats = collect_stats
         self.bloom_columns = tuple(bloom_columns)
@@ -309,7 +322,7 @@ class ChunkWriter:
         valid: Optional[np.ndarray] = None,
         dict_ok: bool = False,
     ) -> BufferMeta:
-        """Fixed-stride lz4 pager on the row grid (± reference
+        """Fixed-stride pager on the row grid (± reference
         src/write.zig:919-960).  With ``dtype``, the elements' integer or
         float dtype, each page is encoded first (``encodings.encode_fixed``);
         ``valid`` marks the slots that are not null."""
@@ -321,9 +334,9 @@ class ChunkWriter:
             if dtype is not None and b > a:
                 v = None if valid is None else valid[a:b]
                 enc, raw = encode_fixed(np.frombuffer(raw, dtype), v, dict_ok)
-            pages.append(out.write_page("lz4", raw))
+            pages.append(out.write_page(self.fixed_codec, raw))
             encs.append(enc)
-        return BufferMeta("lz4", pages, list(grid), page_encodings(encs))
+        return BufferMeta(self.fixed_codec, pages, list(grid), page_encodings(encs))
 
     def _emit_bitmap(
         self, out: _DataSection, bits: np.ndarray, grid: list[int]
@@ -334,8 +347,8 @@ class ChunkWriter:
         pages = []
         starts = B.grid_starts(grid)
         for a, b in zip(starts, grid):
-            pages.append(out.write_page("lz4", B.pack_bits(bits[a:b])))
-        return BufferMeta("lz4", pages, list(grid))
+            pages.append(out.write_page(self.fixed_codec, B.pack_bits(bits[a:b])))
+        return BufferMeta(self.fixed_codec, pages, list(grid))
 
     def _emit_binary(
         self,
@@ -350,21 +363,21 @@ class ChunkWriter:
         row boundaries; row_index_ends records the end row per page.
         ``arr`` is the column's window; each page is encoded by
         ``encodings.encode_binary``."""
-        codec = self.data_codec
+        codec, lcodec = self.data_codec, self.fixed_codec
         lengths = np.diff(offs).astype(np.uint32)
         dpages, lpages, encs = [], [], []
         starts = B.grid_starts(grid)
         for a, b in zip(starts, grid):
             enc, lraw, draw, lcomp, dcomp = encode_binary(
                 arr.slice(a, b - a), lengths[a:b],
-                bytes(data[int(offs[a]) : int(offs[b])]), codec,
+                bytes(data[int(offs[a]) : int(offs[b])]), lcodec, codec,
             )
-            lpages.append(out.write_page("lz4", lraw, lcomp))
+            lpages.append(out.write_page(lcodec, lraw, lcomp))
             dpages.append(out.write_page(codec, draw, dcomp))
             encs.append(enc)
         return (
             BufferMeta(codec, dpages, list(grid)),
-            BufferMeta("lz4", lpages, list(grid), page_encodings(encs)),
+            BufferMeta(lcodec, lpages, list(grid), page_encodings(encs)),
         )
 
     def _page_stats(self, arr: pa.Array, win_off: int, grid: list[int]) -> Optional[dict]:

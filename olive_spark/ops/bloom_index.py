@@ -408,7 +408,7 @@ def probe_bloom_index(
     # relation tax dominated warm serve latency (r12 verdict task #4);
     # any append/compact/fold bumps the shards snapshot version, so a
     # stale bitmap can never be served
-    from olive_spark.ops.relcache import cached_relation
+    from olive_spark.ops.relcache import cached_relation, persist_latest
 
     shards = cached_relation(spark, d, table="bloom_shards")
 
@@ -452,20 +452,20 @@ def probe_bloom_index(
         out["__maybe_dup"] = hit
         return out
 
-    flagged = (
+    flagged = persist_latest(
         batch.groupBy("__shard")
         .cogroup(shards.groupBy(F.col("shard").cast("int")))
         .applyInPandas(
             flag,
             f"content_hash string, {id_col} {id_type}, "
             "__maybe_dup boolean",
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        "bloom_index.probe_bloom_index", StorageLevel.MEMORY_AND_DISK,
     )
     # materialize the (batch-sized) flag result so the upstream hash
     # aggregate can be RELEASED before returning: both downstream
-    # branches read `flagged`; keeping `batch` cached too would leak
-    # one extra cached frame per probe call in a long-lived session
+    # branches read `flagged` (released by the next probe); keeping
+    # `batch` cached too would leak one extra cached frame per probe
     flagged.count()
     batch.unpersist()
     corpus_hashes = corpus_df.select(

@@ -429,12 +429,6 @@ def contamination_check(
     )
 
 
-# last persisted token projection per Spark application — bounds the
-# standing cache footprint of token_budget_mix at one projection (see
-# its docstring); never holds correctness state
-_TOKS_PERSISTED: dict = {}
-
-
 def token_budget_mix(
     df: DataFrame, budget_per_source: int,
     text_col: str = "text", source_col: str = "source", id_col: str = "doc_id",
@@ -495,12 +489,8 @@ def token_budget_mix(
     ranking each consume it, and re-tokenizing the corpus three times
     would triple the dominant cost (measured 2.9× at sf0.1).  It is a
     3-column row per document (disk-spillable; Spark evicts LRU).  The
-    function cannot unpersist it itself (the returned plan is lazy),
-    so the NEXT call unpersists the previous call's projection — the
-    standing footprint is bounded at one projection per session, not
-    one per call.  Callers interleaving two concurrent
-    token_budget_mix plans lose the first one's cache (recompute, not
-    wrong results)."""
+    NEXT call releases it (``relcache.persist_latest``), so the standing
+    footprint is one projection per session, not one per call."""
     from olive_spark.ops.textstats import tokens
 
     from pyspark.sql.types import IntegralType, NumericType
@@ -514,15 +504,12 @@ def token_budget_mix(
         n_tokens_col if n_tokens_col is not None
         else F.size(tokens(F.col(text_col)))
     )
-    toks = df.select(source_col, id_col, n_tok.alias("n_tokens")).persist()
-    sid = df.sparkSession.sparkContext.applicationId
-    prev = _TOKS_PERSISTED.pop(sid, None)
-    if prev is not None:
-        try:
-            prev.unpersist(False)
-        except Exception:  # noqa: BLE001 — session may be gone
-            pass
-    _TOKS_PERSISTED[sid] = toks
+    from olive_spark.ops.relcache import persist_latest
+
+    toks = persist_latest(
+        df.select(source_col, id_col, n_tok.alias("n_tokens")),
+        "curation.token_budget_mix",
+    )
     buckets = toks.groupBy(source_col, "n_tokens").agg(
         F.sum(F.col("n_tokens").cast("long")).alias("__btok"),
         F.count("*").alias("__bcnt"),

@@ -494,11 +494,15 @@ def minhash_lsh_pairs(
 
     Signatures are persisted before the self-join: both sides share one
     computation, and at scale a (doc_id, 64×long) cache is far cheaper
-    than a second full-text scan."""
+    than a second full-text scan.  The next call releases them
+    (``relcache.persist_latest``)."""
     from pyspark import StorageLevel
 
-    sigs = minhash_signatures(df, text_col, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    from olive_spark.ops.relcache import persist_latest
+
+    sigs = persist_latest(
+        minhash_signatures(df, text_col, id_col), "dedup.minhash_lsh_pairs",
+        StorageLevel.MEMORY_AND_DISK,
     )
     # the banding self-join moves ONLY (doc_id, band_id, band_hash)
     # triples — the 64-long signatures would be replicated 16× through
@@ -712,8 +716,11 @@ def embedding_neardup_pairs(
 
     from pyspark import StorageLevel
 
-    base = df.select(id_col, vec_col).mapInArrow(assign, out_schema).persist(
-        StorageLevel.MEMORY_AND_DISK
+    from olive_spark.ops.relcache import persist_latest
+
+    base = persist_latest(
+        df.select(id_col, vec_col).mapInArrow(assign, out_schema),
+        "dedup.embedding_neardup_pairs", StorageLevel.MEMORY_AND_DISK,
     )
     a, b = base.alias("a"), base.alias("b")
     cand = a.join(
@@ -1144,15 +1151,20 @@ def incremental_dedup(
 
         from pyspark import StorageLevel
 
+        from olive_spark.ops.relcache import persist_latest
+
         id_type = dict(new_df.dtypes)[id_col]
         # persisted: both the definite-new and the confirm-join branch
         # read it, and without a persist the upstream hash-agg would
-        # run twice
-        flagged = batch.mapInArrow(
-            flag,
-            f"content_hash string, __h1 long, __h2 long, "
-            f"{id_col} {id_type}, __maybe_dup boolean",
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # run twice; the next call releases it
+        flagged = persist_latest(
+            batch.mapInArrow(
+                flag,
+                f"content_hash string, __h1 long, __h2 long, "
+                f"{id_col} {id_type}, __maybe_dup boolean",
+            ),
+            "dedup.incremental_dedup", StorageLevel.MEMORY_AND_DISK,
+        )
         definite = flagged.filter(~F.col("__maybe_dup"))
         maybe = flagged.filter(F.col("__maybe_dup")).join(
             corpus_hashes, "content_hash", "left_anti"

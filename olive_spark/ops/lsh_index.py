@@ -271,20 +271,21 @@ def probe_index(
     from pyspark import StorageLevel
 
     from olive_spark.datasource import register_olive
+    from olive_spark.ops.relcache import cached_relation, persist_latest
 
     register_olive(spark)
     meta = load_meta(index_dir)
     idx_id = meta["id_col"]
-    q_sigs = minhash_signatures(query, text_col, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # released by the next probe
+    q_sigs = persist_latest(
+        minhash_signatures(query, text_col, id_col), "lsh_index.probe_index",
+        StorageLevel.MEMORY_AND_DISK,
     )
     q_bands = band_hashes(q_sigs, id_col).select(
         F.col(id_col).alias("__qid"), "band_id", "band_hash"
     )
     # index relations come from the version-keyed cache: the fixed
     # Python-DSv2 relation tax was the serve's dominant cost (r12)
-    from olive_spark.ops.relcache import cached_relation
-
     stored_bands = cached_relation(
         spark, os.path.join(index_dir, "bands")
     ).select(

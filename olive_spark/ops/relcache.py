@@ -1,4 +1,6 @@
-"""Memoized Python-DSv2 index relations (r12 verdict task #4).
+"""Memoized Python-DSv2 index relations (r12 verdict task #4), and the
+bounded cache of frames that lazily returned plans read
+(:func:`persist_latest`).
 
 Creating a Python data source relation (``spark.read.format("olive")
 .load(...)``) costs a fixed pair of plan-side Python worker round
@@ -56,4 +58,31 @@ def cached_relation(
     if len(_CACHE) > 128:
         _CACHE.clear()
     _CACHE[key] = df
+    return df
+
+
+# the frame each operator last persisted, per (Spark application,
+# operator): bounds the cache those operators hold; never holds
+# correctness state
+_PERSISTED: dict = {}
+
+
+def persist_latest(df, op: str, level=None):
+    """Persist ``df`` for a lazily returned plan of operator ``op``, first
+    releasing the frame the previous call of ``op`` persisted in the same
+    Spark application.  Such an operator cannot unpersist the frame
+    itself (its plan runs after it returns), and every cached plan also
+    lengthens each later query's cache lookup, so the standing footprint
+    is one frame per operator, not one per call.  A caller interleaving
+    two plans of one operator loses the first one's cache: a recompute,
+    not a wrong result."""
+    key = (df.sparkSession.sparkContext.applicationId, op)
+    prev = _PERSISTED.pop(key, None)
+    if prev is not None:
+        try:
+            prev.unpersist(False)
+        except Exception:  # noqa: BLE001 — session may be gone
+            pass
+    df = df.persist() if level is None else df.persist(level)
+    _PERSISTED[key] = df
     return df

@@ -745,3 +745,43 @@ def test_span_family_adversarial_layouts(spark):
             gnf, gnd, gcov = got_cov[i]
             assert (gnf, gnd) == (nf, nd), (trial, i)
             assert gcov == pytest.approx(cov), (trial, i)
+
+
+def test_lazy_plans_keep_one_cached_frame_per_operator(spark, tmp_path):
+    """Operators whose returned plan reads a frame they persisted release
+    the previous call's frame: three calls on distinct inputs, each plan
+    run, leave at most one cached frame per operator."""
+    from pyspark.sql import functions as F
+
+    from olive_spark.ops import bloom_index, curation, dedup, lsh_index
+
+    docs = spark.createDataFrame(
+        [(i, f"{BASE} {i % 7}", f"s{i % 2}") for i in range(40)],
+        ["doc_id", "text", "source"],
+    )
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, 0.5]) for i in range(30)], ["vec_id", "embedding"]
+    )
+    corpus = docs.filter("doc_id < 20")
+    bloom = dedup.build_corpus_bloom(corpus, expected_items=64)
+    lsh_dir, bloom_dir = str(tmp_path / "lsh"), str(tmp_path / "bloom")
+    lsh_index.build_lsh_index(spark, corpus, lsh_dir)
+    bloom_index.build_bloom_index(spark, corpus, bloom_dir, expected_items=64, n_shards=2)
+    ops = {
+        "minhash_lsh_pairs": lambda d: dedup.minhash_lsh_pairs(d),
+        "embedding_neardup_pairs": lambda d: dedup.embedding_neardup_pairs(
+            vecs.join(d.select(F.col("doc_id").alias("vec_id")), "vec_id")),
+        "incremental_dedup": lambda d: dedup.incremental_dedup(d, corpus, bloom=bloom),
+        "probe_index": lambda d: lsh_index.probe_index(spark, d, lsh_dir),
+        "probe_bloom_index": lambda d: bloom_index.probe_bloom_index(
+            spark, d, corpus, bloom_dir),
+        "token_budget_mix": lambda d: curation.token_budget_mix(d, 100),
+    }
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    for i, (name, op) in enumerate(ops.items()):
+        before = persisted().size()
+        for k in range(3):
+            # inputs distinct across operators too: Spark shares one cache
+            # entry between equal plans
+            op(docs.filter(F.col("doc_id") >= 3 * i + k)).count()
+        assert persisted().size() - before <= 1, name

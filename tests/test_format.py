@@ -52,8 +52,8 @@ def test_compression_biases(codec_bias):
     assert_tables_equal(got, t)
 
 
-def test_all_primitive_types():
-    t = pa.table(
+def make_primitive_table():
+    return pa.table(
         {
             "i8": pa.array([1, None, -3], pa.int8()),
             "i16": pa.array([1, None, -3], pa.int16()),
@@ -87,6 +87,10 @@ def test_all_primitive_types():
             "fsb7": pa.array([b"1234567", None, b"abcdefg"], pa.binary(7)),
         }
     )
+
+
+def test_all_primitive_types():
+    t = make_primitive_table()
     got = roundtrip({"t": t})["t"]
     assert_tables_equal(got, t)
 
@@ -574,14 +578,80 @@ def _v1_table() -> pa.Table:
     })
 
 
+def _committed_file(name: str) -> bytes:
+    import os
+
+    with open(os.path.join(os.path.dirname(__file__), "data", name), "rb") as f:
+        return f.read()
+
+
 def test_reads_committed_format_v1_file():
     # written by the version-1 writer (before page encodings) from
     # _v1_table() with page_rows=64
-    import os
-
-    with open(os.path.join(os.path.dirname(__file__), "data", "format_v1.olive"), "rb") as f:
-        blob = f.read()
-    r = ChunkReader(blob)
+    r = ChunkReader(_committed_file("format_v1.olive"))
     assert r.header.version == 1
     assert_tables_equal(r.read_table(), _v1_table())
     assert r.read_table(pages=[1]).equals(_v1_table().slice(64).combine_chunks())
+
+
+def test_reads_committed_format_v2_lz4_file():
+    # written by the version-2 writer whose balanced bias gave lz4 to all
+    # but var-width data, from _v1_table() with page_rows=64
+    r = ChunkReader(_committed_file("format_v2_lz4.olive"))
+    assert r.header.version == 2
+    assert {c for _, _, c in _buffer_codecs(r)} == {"lz4", "zstd"}
+    assert_tables_equal(r.read_table(), _v1_table())
+    assert r.read_table(pages=[1]).equals(_v1_table().slice(64).combine_chunks())
+
+
+# ------------------------------------------------------ codec policy per bias
+
+
+def _codec_matrix() -> dict[str, pa.Table]:
+    """Every type of the round-trip matrix, with nulls, encoded pages and
+    both global dictionaries."""
+    rng = np.random.default_rng(3)
+    fsb = pa.table({
+        "h20": pa.array([rng.bytes(20) for _ in range(9)] + [None], pa.binary(20)),
+        "h32": pa.array([rng.bytes(32) for _ in range(10)], pa.binary(32)),
+    })
+    return {"prim": make_primitive_table(), "nested": make_nested_table(),
+            "fsb": fsb, "enc": _v1_table()}
+
+
+def _buffer_codecs(r: ChunkReader) -> list[tuple[str, str, str]]:
+    """(array tag, buffer role, codec) for every buffer in the header."""
+    stack = [f for t in r.header.tables for f in t.fields]
+    out = []
+    while stack:
+        h = stack.pop()
+        stack.extend(h.children)
+        out += [(h.tag, role, b.compression) for role, b in h.buffers.items()]
+    return out
+
+
+def test_balanced_bias_compresses_every_page_with_zstd():
+    tables = _codec_matrix()
+    blob = write_chunk(tables, page_rows=64)
+    r = ChunkReader(blob)
+    codecs = _buffer_codecs(r)
+    assert {role for _, role, _ in codecs} == {"validity", "values", "data", "lengths", "indices"}
+    assert {c for _, _, c in codecs} == {"zstd"}
+    # the global dictionaries stay uncompressed: their bytes are the
+    # chunk's sorted distinct values of that width as they are
+    for d in (r.header.dict20, r.header.dict32):
+        vals = {
+            v for t in tables.values() for col in t.columns
+            if col.type == pa.binary(d.width) for v in col.to_pylist() if v
+        }
+        assert bytes(r.data[d.offset : d.offset + d.size]) == b"".join(sorted(vals))
+    got = read_all_tables(blob)
+    for name, t in tables.items():
+        assert_tables_equal(got[name], t)
+
+
+def test_read_optimized_bias_keeps_the_lz4_split():
+    blob = write_chunk(_codec_matrix(), page_rows=64, compression_bias="read_optimized")
+    for tag, role, codec in _buffer_codecs(ChunkReader(blob)):
+        want = "lz4_hc" if (tag, role) == ("binary", "data") else "lz4"
+        assert codec == want, (tag, role)

@@ -11,12 +11,14 @@ the dispatch with a bare KeyError / IndexError instead of an OliveError.
 The mini-fuzz runs 10,000 seeded random bit-flips over a corpus of base
 chunks covering every array tag and every page encoding (frame of
 reference at each width a page takes, page dictionaries of ints, floats
-and strings, narrowed lengths) and asserts zero escapes.  The encoding
-cases forge descriptors and pages that a writer never emits: unknown
-names, out-of-set widths, dictionary codes past the dictionary, bases
-whose codes overflow the type, descriptor/page count mismatches,
-descriptors in a version-1 header, and narrow codes that claim more rows
-than a buffer may decode to.
+and strings, narrowed lengths), all under zstd as the default bias
+writes them, and asserts zero escapes.  The encoding cases forge
+descriptors and pages that a writer never emits, under lz4 and zstd:
+unknown names, out-of-set widths, dictionary codes past the dictionary,
+bases whose codes overflow the type, descriptor/page count mismatches,
+descriptors in a version-1 header, narrow codes that claim more rows
+than a buffer may decode to, and zstd frames that decode to another
+size than their page declares.
 """
 
 from __future__ import annotations
@@ -35,7 +37,9 @@ from olive_spark.format import (
     read_chunk,
     write_chunk,
 )
+from olive_spark.format import reader as reader_mod
 from olive_spark.format.compression import compress
+from olive_spark.format.errors import DecompressFail
 from olive_spark.format.header import (
     MAX_BUFFER_BYTES,
     ArrayHeader,
@@ -217,11 +221,20 @@ def _encoded_buffers(j: dict):
         yield from (b for b in h.get("b", {}).values() if "e" in b)
 
 
-def _forge(dt: pa.DataType, payload: bytes, enc: list, rows: int) -> bytes:
+CODECS = ("lz4", "zstd")
+
+
+def _forge(
+    dt: pa.DataType, payload: bytes, enc: list, rows: int, codec: str = "lz4",
+    declared: int | None = None,
+) -> bytes:
     """A one-column chunk whose single values page is ``payload`` under
-    descriptor ``enc`` — bytes no writer would emit."""
-    comp = compress("lz4", payload)
-    buf = BufferMeta("lz4", [Page(0, len(payload), len(comp))], [rows], [enc])
+    descriptor ``enc`` and ``codec`` — bytes no writer would emit.  The
+    page declares ``declared`` bytes uncompressed (default: the payload's
+    size)."""
+    comp = compress(codec, payload)
+    size = len(payload) if declared is None else declared
+    buf = BufferMeta(codec, [Page(0, size, len(comp))], [rows], [enc])
     th = TableHeader(
         "t", rows, ["x"], [type_to_json(dt)],
         [ArrayHeader("primitive", rows, 0, {"values": buf})],
@@ -231,10 +244,7 @@ def _forge(dt: pa.DataType, payload: bytes, enc: list, rows: int) -> bytes:
 
 def test_forged_pages_decode_or_raise_typed() -> None:
     codes = bytes([0, 3, 1])
-    assert read_chunk(_forge(pa.int32(), codes, ["for", 1, -5], 3)).column(0).to_pylist() == [-5, -2, -4]
     dict_page = np.array([10, 20], np.int64).tobytes()
-    assert read_chunk(_forge(pa.int64(), dict_page + bytes([1, 0, 1]), ["dict", 1, 2], 3)) \
-        .column(0).to_pylist() == [20, 10, 20]
     hostile = {
         "dictionary code past the dictionary": (
             pa.int64(), dict_page + bytes([0, 2, 1]), ["dict", 1, 2]),
@@ -245,29 +255,48 @@ def test_forged_pages_decode_or_raise_typed() -> None:
         "page shorter than its codes": (pa.int64(), dict_page + bytes([0]), ["dict", 1, 2]),
         "encoding on a type that takes none": (pa.decimal128(5, 2), codes, ["for", 1, 0]),
     }
-    for why, (dt, payload, enc) in hostile.items():
-        with pytest.raises(OliveError):
-            read_chunk(_forge(dt, payload, enc, 3))
-            pytest.fail(why)
+    for codec in CODECS:
+        assert read_chunk(_forge(pa.int32(), codes, ["for", 1, -5], 3, codec)) \
+            .column(0).to_pylist() == [-5, -2, -4]
+        assert read_chunk(_forge(pa.int64(), dict_page + bytes([1, 0, 1]), ["dict", 1, 2], 3, codec)) \
+            .column(0).to_pylist() == [20, 10, 20]
+        for why, (dt, payload, enc) in hostile.items():
+            with pytest.raises(OliveError):
+                read_chunk(_forge(dt, payload, enc, 3, codec))
+                pytest.fail(f"{why} ({codec})")
 
 
-def test_encoded_pages_held_to_buffer_cap() -> None:
+def test_encoded_pages_held_to_buffer_cap(monkeypatch) -> None:
     # a few bytes of 1-byte codes that claim 2^28 + 8 int64 rows, or
     # 2^29 + 8 u32 string lengths, would decode past MAX_BUFFER_BYTES: the
     # reader refuses before it decompresses or allocates anything
-    rows = (MAX_BUFFER_BYTES >> 3) + 8
-    with pytest.raises(BufferTooBig):
-        read_chunk(_forge(pa.int64(), bytes(8), ["for", 1, 0], rows))
-    rows = (MAX_BUFFER_BYTES >> 2) + 8
-    comp = compress("lz4", bytes(8))
-    lengths = BufferMeta("lz4", [Page(0, 8, len(comp))], [rows], [["for", 1, 0]])
-    data = BufferMeta("zstd", [Page(len(comp), 0, 0)], [rows])
-    th = TableHeader(
-        "t", rows, ["s"], [type_to_json(pa.string())],
-        [ArrayHeader("binary", rows, 0, {"lengths": lengths, "data": data})],
-    )
-    with pytest.raises(BufferTooBig):
-        read_chunk(frame_file(ChunkHeader(2, [th], None, None, len(comp)), comp))
+    def refuse(*_):
+        raise AssertionError("page decompressed before its decoded size was checked")
+
+    monkeypatch.setattr(reader_mod, "decompress", refuse)
+    for codec in CODECS:
+        rows = (MAX_BUFFER_BYTES >> 3) + 8
+        with pytest.raises(BufferTooBig):
+            read_chunk(_forge(pa.int64(), bytes(8), ["for", 1, 0], rows, codec))
+        rows = (MAX_BUFFER_BYTES >> 2) + 8
+        comp = compress(codec, bytes(8))
+        lengths = BufferMeta(codec, [Page(0, 8, len(comp))], [rows], [["for", 1, 0]])
+        data = BufferMeta("zstd", [Page(len(comp), 0, 0)], [rows])
+        th = TableHeader(
+            "t", rows, ["s"], [type_to_json(pa.string())],
+            [ArrayHeader("binary", rows, 0, {"lengths": lengths, "data": data})],
+        )
+        with pytest.raises(BufferTooBig):
+            read_chunk(frame_file(ChunkHeader(2, [th], None, None, len(comp)), comp))
+
+
+@pytest.mark.parametrize("delta", [-1, 1])
+def test_zstd_frame_of_another_size_than_declared(delta: int) -> None:
+    # a well-formed zstd frame of 3 bytes of FOR codes whose page declares
+    # 2 or 4 bytes: the size-exact decompress refuses it before decoding
+    with pytest.raises(DecompressFail):
+        read_chunk(_forge(pa.int32(), bytes([0, 3, 1]), ["for", 1, -5], 3, "zstd",
+                          declared=3 + delta))
 
 
 def _set_first(key_fn):

@@ -20,9 +20,15 @@ line to standard output:
 
 * ``speed``, one per file shape: ``write_chunk`` and ``read_chunk``
   throughput (Arrow MB per second, CPU time of this process) and
-  microseconds per call, the median of ``--reps`` calls, on a 10,000-row
-  ``perf_lineitem`` file and a 20-row ``perfbench.gen.corpus`` file (the
-  corpus ingest's file size).
+  microseconds per call, the median of ``reps`` calls, on
+
+  - ``lineitem_10k``: a 10,000-row ``perf_lineitem`` file (``--reps``);
+  - ``decode_sample``: the first 20,000 rows of ``perf_lineitem`` as one
+    chunk, the sample perfbench's ``format.decode_mb_s`` reads
+    (``max(60, 2 × --reps)`` calls: perfbench times 3 by wall clock,
+    too few to judge a decode change on a shared host);
+  - ``corpus_20``: a 20-row ``perfbench.gen.corpus`` file, the corpus
+    ingest's file size (``10 × --reps``).
 """
 
 from __future__ import annotations
@@ -121,6 +127,8 @@ def main(argv=None) -> int:
     rows += bytes_rows("perf_orders", _files(gen.orders(args.seed, 100_000), 5_000))
     docs = gen.corpus(args.seed, 2_000, 20).docs
     rows.append(speed_row("lineitem_10k", li.slice(0, 10_000).combine_chunks(), args.reps))
+    rows.append(speed_row("decode_sample", li.slice(0, 20_000).combine_chunks(),
+                          max(60, 2 * args.reps)))
     rows.append(speed_row("corpus_20", docs.slice(0, 20).combine_chunks(), args.reps * 10))
     for r in rows:
         print(json.dumps({k: round(v, 4) if isinstance(v, float) else v
