@@ -270,27 +270,16 @@ def scan_branch(spark, path: str, name: str):
     DVs written after the base must not fold into the preview) PLUS the
     branch-scoped DVs staged by delete_on_branch/merge_on_branch."""
     from olive_spark.datasource import register_olive
-    from olive_spark.format.snapshots import files_at
 
     register_olive(spark)
     ref = _load_ref(path, name)
-    base = (
-        files_at(path, ref["base_version"])
-        if ref["base_version"] else []  # branch on an empty table
-    )
-    names = _branch_scan_names(name, ref, base)
-    if not names:
+    view = _branch_view(spark, path, name, ref)
+    if view is None:
         return (
             spark.read.format("olive").option("table", ref["table"])
             .load(path).limit(0)
         )
-    return (
-        spark.read.format("olive")
-        .option("table", ref["table"])
-        .option("files", ",".join(names))
-        .option("dvs", json.dumps(_branch_dv_state(path, name, ref)))
-        .load(path)
-    )
+    return view
 
 
 def _branch_dv_state(path: str, name: str, ref: dict) -> dict:
@@ -312,72 +301,78 @@ def _branch_dv_state(path: str, name: str, ref: dict) -> dict:
     return state
 
 
+def _branch_view(spark, path: str, name: str, ref: dict,
+                 tagged: bool = False):
+    """The branch view: base-version files (none on a branch of an
+    empty table) plus branch files, under the merged DV state; with
+    ``tagged``, each row also carries its file and raw row position —
+    the relation branch mutations stage their DVs from.  None when the
+    view has no files."""
+    from olive_spark.format.snapshots import files_at
+
+    base = files_at(path, ref["base_version"]) if ref["base_version"] else []
+    names = _branch_scan_names(name, ref, base)
+    if not names:
+        return None
+    r = (
+        spark.read.format("olive")
+        .option("table", ref["table"])
+        .option("files", ",".join(names))
+        .option("dvs", json.dumps(_branch_dv_state(path, name, ref)))
+    )
+    if tagged:
+        r = r.option("fileColumn", "_olive_file") \
+            .option("posColumn", "_olive_pos")
+    return r.load(path)
+
+
 def _branch_scan_names(name: str, ref: dict, base: "list[str]") -> list:
     return sorted(base) + [
         os.path.join(_BRANCH_DIR, name, rel) for rel in ref["files"]
     ]
 
 
-def _stage_branch_dvs(positions_df, fc: str, pc: str, path: str,
-                      name: str, run: str, table: str) -> list:
-    """Write one branch-scoped DV per affected file, straight from
-    executors (a grouped-map counterpart of maintenance._stage_dvs, but
-    the blobs land FINAL under ``_olive_branch/<name>/_dv/`` —
-    invisible to everything until the ref records them, so no staging
-    suffix is needed; unrecorded debris dies with the branch dir)."""
-    import pandas as _pd
-
-    def write_group(pdf):
-        import hashlib as _hl
-        import os as _os
-
-        import numpy as _np
-
-        from olive_spark.format import deletion as _D
-
-        rel = pdf[fc].iloc[0]
-        key = _hl.sha1(rel.encode()).hexdigest()[:12]
-        dv_rel = _os.path.join(_BRANCH_DIR, name, "_dv", f"{run}-{key}.dv")
-        dest = _os.path.join(path, dv_rel)
-        _os.makedirs(_os.path.dirname(dest), exist_ok=True)
-        blob = _D.encode_dv(pdf[pc].to_numpy(_np.uint64), table=table)
-        tmp = dest + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        _os.replace(tmp, dest)
-        return _pd.DataFrame({"file": [rel], "dv": [dv_rel], "n": [len(pdf)]})
-
-    out = (
-        positions_df.groupBy(fc)
-        .applyInPandas(write_group, "file string, dv string, n long")
-        .collect()  # one slim row per affected file, never positions
-    )
-    return [(r["file"], r["dv"], int(r["n"])) for r in out]
+def _branch_dv_dir(name: str) -> str:
+    """Where the table's DV stager writes this branch's blobs
+    (``_olive_branch/<name>/_dv/<file>/<run>.dv``): inside the branch
+    dir, so unrecorded debris dies with it."""
+    return os.path.join(_BRANCH_DIR, name, "_dv")
 
 
-def _record_branch_dvs(path: str, name: str, staged: list) -> None:
-    """Fold staged branch DVs into the ref under the metadata commit
-    lock (same RMW + loud-failure contract as _record_branch_files)."""
+def _record_branch_dvs(path: str, name: str, staged: list,
+                       drop: "list[str]" = ()) -> list:
+    """Publish staged branch DVs into the ref under the metadata commit
+    lock: each ``.staging`` blob the stager wrote is renamed final and
+    recorded in ONE ref read-modify-write that also forgets the records
+    of ``drop`` targets (rebase).  Until then the blobs are invisible to
+    every view, and a crash leaves only debris.  Returns the dropped
+    records' blob names.  Same loud-failure contract as
+    _record_branch_files: a branch published (or dropped) meanwhile
+    loses the staged blobs and raises."""
     from olive_spark.format.lock import metadata_commit_lock
+    from olive_spark.ops.maintenance import _discard_staged_dvs
 
     with metadata_commit_lock(path):
         try:
             ref = _load_ref(path, name)
         except ValidationError:
-            for _t, dv_rel, _n in staged:
-                try:
-                    os.remove(os.path.join(path, dv_rel))
-                except OSError:
-                    pass
+            _discard_staged_dvs(path, [(t, d) for t, d, _n in staged])
             raise ValidationError(
                 f"branch {name!r} at {path} was published (or dropped) "
                 "while this mutation was staging — staged DVs removed"
             )
         dvs = {t: list(n) for t, n in (ref.get("dvs") or {}).items()}
+        stale = [b for t in drop for b in dvs.pop(t, [])]
         for target, dv_rel, _n in staged:
-            dvs.setdefault(target, []).append(dv_rel)
+            os.replace(
+                os.path.join(path, dv_rel) + ".staging",
+                os.path.join(path, dv_rel),
+            )
+            if dv_rel not in dvs.setdefault(target, []):
+                dvs[target].append(dv_rel)
         ref["dvs"] = {t: sorted(n) for t, n in dvs.items()}
         _write_ref(path, name, ref)
+    return stale
 
 
 def delete_on_branch(spark, path: str, name: str, condition: str) -> dict:
@@ -390,44 +385,25 @@ def delete_on_branch(spark, path: str, name: str, condition: str) -> dict:
     live DV commits, branch-file DVs re-keyed to the published names).
 
     Scale shape: one provenance scan filtered by the condition, DV
-    blobs written from executors, one slim (file, dv, count) row per
-    affected file to the driver — write cost ∝ deleted rows, exactly
-    like live ``delete_where(mode='dv')``."""
-    from pyspark.sql import functions as F
-
+    blobs written from executors by the table's own stager
+    (maintenance._discover_and_stage_dvs — no shuffle, the scan keeps
+    each file in one task), one slim (file, dv, count) row per affected
+    file to the driver — write cost ∝ deleted rows, exactly like live
+    ``delete_where(mode='dv')``."""
     from olive_spark.datasource import register_olive
     from olive_spark.format.lock import table_write_lock
+    from olive_spark.ops.maintenance import _discover_and_stage_dvs
 
     register_olive(spark)
     with table_write_lock(path):
-        from olive_spark.format.snapshots import files_at
-
         ref = _load_ref(path, name)
-        base = (
-            files_at(path, ref["base_version"])
-            if ref["base_version"] else []
+        scan = _branch_view(spark, path, name, ref, tagged=True)
+        staged = [] if scan is None else _discover_and_stage_dvs(
+            spark, path, ref["table"], condition, uuid.uuid4().hex[:8],
+            "dv", 0.0, scan=scan, dv_dir=_branch_dv_dir(name),
         )
-        names = _branch_scan_names(name, ref, base)
-        if not names:
-            return {"branch": name, "files_dv": 0, "rows_deleted": 0}
-        fc, pc = "_olive_file", "_olive_pos"
-        scan = (
-            spark.read.format("olive")
-            .option("table", ref["table"])
-            .option("files", ",".join(names))
-            .option("dvs", json.dumps(_branch_dv_state(path, name, ref)))
-            .option("fileColumn", fc)
-            .option("posColumn", pc)
-            .load(path)
-        )
-        run = uuid.uuid4().hex[:8]
-        staged = _stage_branch_dvs(
-            scan.filter(F.expr(condition)).select(fc, pc),
-            fc, pc, path, name, run, ref["table"],
-        )
-        if not staged:
-            return {"branch": name, "files_dv": 0, "rows_deleted": 0}
-        _record_branch_dvs(path, name, staged)
+        if staged:
+            _record_branch_dvs(path, name, staged)
     return {
         "branch": name,
         "files_dv": len(staged),
@@ -448,48 +424,27 @@ def merge_on_branch(spark, src_df, path: str, name: str,
     semantics — Delta/Iceberg raise on multiple source rows per target
     match); silently appending both copies would turn the upsert into a
     fan-out insert."""
-    from pyspark.sql import functions as F
-
     from olive_spark.datasource import register_olive
     from olive_spark.format.lock import table_write_lock
+    from olive_spark.ops.maintenance import (
+        _broadcastable, _discover_and_stage_dvs, _merge_key_count,
+    )
 
     register_olive(spark)
-    if (
-        src_df.groupBy(*keys).count()
-        .filter(F.col("count") > 1).limit(1).count()
-    ):
-        raise ValueError(
-            f"merge_on_branch: source has duplicate key tuples on "
-            f"{keys} — MERGE requires at most one source row per key"
-        )
+    n_keys = _merge_key_count(src_df, keys, "merge_on_branch: source")
     with table_write_lock(path):
-        from olive_spark.format.snapshots import files_at
-
         ref = _load_ref(path, name)
-        base = (
-            files_at(path, ref["base_version"])
-            if ref["base_version"] else []
-        )
-        names = _branch_scan_names(name, ref, base)
+        scan = _branch_view(spark, path, name, ref, tagged=True)
         staged: list = []
-        if names:
-            fc, pc = "_olive_file", "_olive_pos"
-            scan = (
-                spark.read.format("olive")
-                .option("table", ref["table"])
-                .option("files", ",".join(names))
-                .option("dvs", json.dumps(_branch_dv_state(path, name, ref)))
-                .option("fileColumn", fc)
-                .option("posColumn", pc)
-                .load(path)
-            )
-            matched = scan.join(
-                src_df.select(*keys).dropDuplicates(list(keys)),
-                on=list(keys), how="left_semi",
-            ).select(fc, pc)
-            run = uuid.uuid4().hex[:8]
-            staged = _stage_branch_dvs(
-                matched, fc, pc, path, name, run, ref["table"],
+        if scan is not None:
+            key_df = src_df.select(*keys)
+            staged = _discover_and_stage_dvs(
+                spark, path, ref["table"], key_df, uuid.uuid4().hex[:8],
+                "dv", 0.0, key_cols=list(keys),
+                broadcast=_broadcastable(
+                    spark, n_keys, [key_df.schema[k].dataType for k in keys]
+                ),
+                scan=scan, dv_dir=_branch_dv_dir(name),
             )
             if staged:
                 _record_branch_dvs(path, name, staged)
@@ -718,6 +673,7 @@ def rebase_branch(spark, path: str, name: str) -> dict:
     from olive_spark.format.snapshots import (
         current_version, dv_state_at, list_live_files,
     )
+    from olive_spark.ops.maintenance import _stage_dvs
 
     register_olive(spark)
     fc, pc = "_olive_file", "_olive_pos"
@@ -791,28 +747,18 @@ def rebase_branch(spark, path: str, name: str) -> dict:
             matched = nr.join(
                 dr.select("__key", "__rk"), ["__key", "__rk"]
             ).select(fc, pc)
-            staged = _stage_branch_dvs(
-                matched, fc, pc, path, name, run, ref["table"],
+            # the pairing join leaves a file's positions spread over its
+            # partitions; the stager needs each file in one task
+            staged = _stage_dvs(
+                spark, path, ref["table"], matched.repartition(fc), run,
+                "dv", 0.0, dv_dir=_branch_dv_dir(name),
             )
         rows_rebased = int(sum(n for _t, _d, n in staged))
         rows_gone = int(n_deleted - rows_rebased)
         _crash_point("rebase_staged")
         # ONE ref RMW: drop every stale record + its blobs, add the
         # re-keyed ones
-        from olive_spark.format.lock import metadata_commit_lock
-
-        with metadata_commit_lock(path):
-            ref = _load_ref(path, name)
-            dvs = {t: list(n) for t, n in (ref.get("dvs") or {}).items()}
-            stale_blobs: list = []
-            for target in conflicts:
-                stale_blobs.extend(dvs.pop(target, []))
-            for t_new, dv_rel, _n in staged:
-                if dv_rel not in dvs.setdefault(t_new, []):
-                    dvs[t_new].append(dv_rel)
-            ref["dvs"] = {t: sorted(n) for t, n in dvs.items()}
-            _write_ref(path, name, ref)
-        for b in stale_blobs:
+        for b in _record_branch_dvs(path, name, staged, drop=conflicts):
             try:
                 os.remove(os.path.join(path, b))
             except OSError:

@@ -227,79 +227,6 @@ def pagerank(
         spark.conf.set("spark.sql.shuffle.partitions", saved_p)
 
 
-def _pagerank_round_plan_for_capture(edges: DataFrame) -> DataFrame:
-    """One power-iteration round's step plan, built exactly the way
-    :func:`_pagerank_body`'s loop builds it (minus the eager
-    localCheckpoint at the end, which would execute it) — used by
-    tools/capture_plans_r16.py so the committed plan evidence tracks
-    the real loop body."""
-    from pyspark.sql import Observation
-
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).dropDuplicates(["src", "dst"])
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("__deg"))
-    links = _persist_links(e.join(outdeg, "src"))
-    flagged = nodes.join(
-        outdeg.select(F.col("src").alias("node"),
-                      F.lit(True).alias("__has_out")),
-        "node", "left",
-    ).select(
-        "node", F.coalesce(F.col("__has_out"), F.lit(False)).alias("__out")
-    )
-    n = 1000  # representative; the plan shape does not depend on n
-    ranks = flagged.select(
-        "node", F.lit(1.0 / n).alias("rank"), "__out"
-    ).localCheckpoint()
-    contrib = links.join(
-        ranks.select("node", "rank"), links["src"] == F.col("node")
-    ).select(
-        F.col("dst").alias("node"),
-        (F.col("rank") / F.col("__deg")).alias("__c"),
-        F.lit(None).cast("boolean").alias("__out"),
-        F.lit(None).cast("double").alias("__old"),
-    )
-    zeros = ranks.select(
-        "node", F.lit(0.0).alias("__c"), "__out",
-        F.col("rank").alias("__old"),
-    )
-    import uuid as _uuid
-
-    obs = Observation(f"__pr_capture_{_uuid.uuid4().hex[:12]}")
-    step = (
-        contrib.unionByName(zeros)
-        .groupBy("node")
-        .agg(
-            F.sum("__c").alias("__in"),
-            F.max("__out").alias("__out"),
-            F.max("__old").alias("__old"),
-        )
-        .select(
-            "node",
-            (F.lit(0.15 / n) + F.lit(0.85)
-             * (F.col("__in") + F.lit(0.0))).alias("rank"),
-            "__out",
-            "__old",
-        )
-        .observe(
-            obs,
-            F.sum(F.abs(F.col("rank") - F.col("__old"))).alias("__delta"),
-            F.coalesce(
-                F.sum(F.when(~F.col("__out"), F.col("rank"))), F.lit(0.0)
-            ).alias("__dang"),
-        )
-    )
-    # links stays persisted so the captured plan shows the cached-scan
-    # node the real loop joins against (capture process exits anyway)
-    return step
-
-
 def _persist_links(links: DataFrame) -> DataFrame:
     """Materialize the static per-round join input HASH-PARTITIONED AND
     SORTED on ``src`` (r16, guide §2.4): the per-round ``links ⋈

@@ -36,8 +36,9 @@ def _locked(path_arg: int, heal_txns: bool = False):
     so composed ops (restore → recovery, compact_if_needed → compact,
     facade → op) acquire once.
 
-    ``heal_txns`` (ADVICE r13): file-REWRITING ops (compact /
-    delete_where / merge_upsert) publish any committed-but-unpublished
+    ``heal_txns``: every file-REWRITING op (compact,
+    respec_partitions, merge_upsert, delete_where, replace_where,
+    update_where) publishes any committed-but-unpublished
     multi-table-txn slice before reading the table — a crashed
     coordinator's staged DVs reference the current files, and rewriting
     first would strand the committed delete leg.  Vacuum keeps its own
@@ -305,15 +306,9 @@ def compact(
     permanently."""
     from pyspark.sql import functions as F
 
-    from olive_spark.datasource import register_olive
     from olive_spark.datasource.olive_datasource import _list_chunk_files
 
-    register_olive(spark)
-    # Finish any interrupted prior compaction FIRST: if a manifest is
-    # pending, the directory may hold old+new duplicates which a naive
-    # re-read would rewrite into the table for good.
-    _recover_pending(path)
-    _seed_snapshot_log(path)
+    _begin_mutation(spark, path)
     before = _list_chunk_files(path)
     n_before_total = len(before)  # whole-table count, even when scoped
     # argument validation BEFORE any scan: a bad zorder request on a
@@ -334,52 +329,41 @@ def compact(
             raise ValueError("hilbert clustering takes exactly 2 columns")
     if files is not None and where is not None:
         raise ValueError("'files' and 'where' are exclusive")
-    if files is not None:
-        live = {os.path.relpath(f, path) for f in before}
-        unknown = sorted(set(files) - live)
-        if unknown:
-            raise ValidationError(
-                f"compact(files=...): not live files: {unknown[:5]}"
-            )
-        affected = sorted(set(files))
-        if not affected:
-            return {"files_before": len(before), "files_after": len(before),
-                    "rows": 0, "files_matched": 0}
-        n_matched = len(affected)
-        before = [os.path.join(path, rel) for rel in affected]
-        df = (
-            spark.read.format("olive")
-            .option("table", table)
-            .option("files", ",".join(affected))
-            .load(path)
-        )
-    elif where is not None:
-        # scoped OPTIMIZE (Delta's `OPTIMIZE ... WHERE`): restrict the
-        # rewrite to the FILES that contain a matching row — discovery
-        # is one file-name aggregate (same shape as delete_where's);
-        # at 100 TB you compact yesterday's partition, never the
-        # table.  Untouched files keep their bytes, stats, and names.
-        fc = "_olive_file"
-        tagged = _discovery_scan(spark, path, table, fc)
-        affected = sorted(
-            r[0]
-            for r in tagged.filter(F.expr(where))
-            .select(fc).distinct().collect()
-        )
-        if not affected:
-            return {"files_before": len(before), "files_after": len(before),
-                    "rows": 0, "files_matched": 0}
-        n_matched = len(affected)
-        before = [os.path.join(path, rel) for rel in affected]
-        df = (
-            spark.read.format("olive")
-            .option("table", table)
-            .option("files", ",".join(affected))
-            .load(path)
-        )
-    else:
-        n_matched = None
+    n_matched = None
+    if files is None and where is None:
         df = spark.read.format("olive").load(path)
+    else:
+        if files is not None:
+            live = {os.path.relpath(f, path) for f in before}
+            unknown = sorted(set(files) - live)
+            if unknown:
+                raise ValidationError(
+                    f"compact(files=...): not live files: {unknown[:5]}"
+                )
+            affected = sorted(set(files))
+        else:
+            # scoped OPTIMIZE (Delta's `OPTIMIZE ... WHERE`): restrict
+            # the rewrite to the FILES that contain a matching row —
+            # discovery is one file-name aggregate; at 100 TB you
+            # compact yesterday's partition, never the table.  Untouched
+            # files keep their bytes, stats, and names.
+            fc = "_olive_file"
+            affected = sorted(
+                r[0]
+                for r in _discovery_scan(spark, path, table, fc)
+                .filter(F.expr(where)).select(fc).distinct().collect()
+            )
+        if not affected:
+            return {"files_before": len(before), "files_after": len(before),
+                    "rows": 0, "files_matched": 0}
+        n_matched = len(affected)
+        before = [os.path.join(path, rel) for rel in affected]
+        df = (
+            spark.read.format("olive")
+            .option("table", table)
+            .option("files", ",".join(affected))
+            .load(path)
+        )
     # compact keeps every live row of the files it rewrites, so the
     # output sizing comes from METADATA when possible (r15, guide §5:
     # manifest/header totals minus DV-masked positions) — the count
@@ -550,7 +534,7 @@ def compact_if_needed(
             "files": len(files)}
 
 
-@_locked(1)
+@_locked(1, heal_txns=True)
 def respec_partitions(
     spark,
     path: str,
@@ -588,7 +572,6 @@ def respec_partitions(
     respec_partitions converges.
 
     Returns {files_before, files_after, rows, version}."""
-    from olive_spark.datasource import register_olive
     from olive_spark.datasource.olive_datasource import _list_chunk_files
     from olive_spark.format.partition import (
         has_transforms,
@@ -599,10 +582,8 @@ def respec_partitions(
     )
     from olive_spark.format.snapshots import current_version
 
-    register_olive(spark)
     transforms = parse_spec(new_spec)  # validates the grammar up front
-    _recover_pending(path)
-    _seed_snapshot_log(path)
+    _begin_mutation(spark, path)
     before = _list_chunk_files(path)
     original_rels = [os.path.relpath(f, path) for f in before]
     df = spark.read.format("olive").option("table", table).load(path)
@@ -678,6 +659,31 @@ def _discovery_scan(
     return r.load(path)
 
 
+def _begin_mutation(spark, path: str,
+                    isolation: str = "write_serializable", **mode) -> int:
+    """The prologue every rewriting verb shares: validate the physical
+    ``mode``/``strategy`` keyword (passed by name, so the error names
+    the caller's own parameter) and the ``isolation`` level, register
+    the source, finish any interrupted prior rewrite FIRST (a pending
+    manifest means old+new duplicates a naive re-read would bake into
+    the table for good), seed the snapshot log, and return the version
+    the mutation reads."""
+    from olive_spark.datasource import register_olive
+    from olive_spark.format.snapshots import current_version
+
+    for name, value in mode.items():
+        if value not in ("auto", "dv", "rewrite"):
+            raise ValueError(f"{name} must be 'auto', 'dv', or 'rewrite'")
+    if isolation not in ("write_serializable", "serializable"):
+        raise ValueError(
+            "isolation must be 'write_serializable' or 'serializable'"
+        )
+    register_olive(spark)
+    _recover_pending(path)
+    _seed_snapshot_log(path)
+    return current_version(path)
+
+
 def _seed_snapshot_log(path: str) -> None:
     """Seed the snapshot log from the live listing BEFORE a rewrite op
     touches any file: `_rewrite_and_swap` appends its entry only after
@@ -749,24 +755,24 @@ def _rewrite_and_swap(
     page_rows: "int | None" = None,
 ) -> "list[str]":
     """Write ``df`` as the replacement for ``original_rels`` inside the
-    live table at ``path`` — the crash-safe copy-on-write core shared by
-    ``compact``, ``merge_upsert``, and ``delete_where``.
+    live table at ``path`` — the crash-safe copy-on-write core every
+    file-rewriting verb commits through.
 
     Four phases; at no point is the replaced data unreadable:
     1. write ``df`` to a sibling temp dir, then stage the new files into
        the live dir under non-.olive names (invisible to scans);
     2. write the intent manifest (atomic rename) listing originals +
        replacement names — the recovery point (named compact-*.manifest
-       regardless of caller so _recover_pending/vacuum handle all three
-       operations identically);
+       regardless of caller so _recover_pending/vacuum handle every
+       caller identically);
     3. activate replacements with atomic renames (readers may briefly
        see old AND new — a transient duplicate beats a lost table);
     4. retire the originals (delete, or move to _olive_history/ under
        ``retain_history`` so pre-rewrite snapshots stay reconstructable),
        then drop the manifest.  A crash in 1-2 leaves the old files
        untouched (staged files are inert debris); a crash in 3-4 leaves
-       a readable superset PLUS the manifest, so vacuum()/the next
-       compact()/merge/delete finishes the originals-retire.
+       a readable superset PLUS the manifest, so vacuum() or the next
+       rewriting verb finishes the originals-retire.
 
     Afterwards the stats manifest is refreshed (new files keep their
     commit-time stats under the activated names) and one snapshot-log
@@ -1502,20 +1508,10 @@ def merge_upsert(
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from olive_spark.datasource import register_olive
     from olive_spark.datasource.olive_datasource import _list_chunk_files
     from olive_spark.format.snapshots import current_version
 
-    if strategy not in ("auto", "dv", "rewrite"):
-        raise ValueError("strategy must be 'auto', 'dv', or 'rewrite'")
-    if isolation not in ("write_serializable", "serializable"):
-        raise ValueError(
-            "isolation must be 'write_serializable' or 'serializable'"
-        )
-    register_olive(spark)
-    _recover_pending(path)
-    _seed_snapshot_log(path)
-    v0 = current_version(path)
+    v0 = _begin_mutation(spark, path, isolation, strategy=strategy)
     fc = "_olive_file"
     if fc in source.columns:
         raise ValueError(f"source must not carry the provenance column {fc!r}")
@@ -1829,34 +1825,25 @@ def merge_upsert(
             affected = sorted(set(affected) | set(nmbs_files))
         dv_add = [(f, dv) for f, dv, _n in staged if dv is not None]
         pre_version = current_version(path)
-        _test_hook("serializable_window")
-        precommit = None
-        if isolation == "serializable":
-            # the merge's read set: rows whose keys the source touches —
-            # or, under NOT MATCHED BY SOURCE, EVERY target row (absent
-            # keys get deleted), where any concurrent append conflicts
-            if not_matched_by_source_delete:
-                def _conflicts(files):  # noqa: ARG001 — any append conflicts
-                    return bool(files)
-            else:
-                _keys_df = keys.distinct()
 
-                def _conflicts(files):
-                    df = (
-                        spark.read.format("olive").option("table", table)
-                        .option("files", ",".join(files)).load(path)
-                    )
-                    return bool(
-                        df.join(_keys_df, key_cols, "left_semi")
-                        .limit(1).count() > 0
-                    )
-            try:
-                precommit = _serializable_precommit(
-                    spark, path, v0, _conflicts
-                )
-            except Exception:
-                _discard_staged_dvs(path, dv_add)
-                raise
+        # the merge's read set: rows whose keys the source touches — or,
+        # under NOT MATCHED BY SOURCE, EVERY target row (absent keys get
+        # deleted), where any concurrent append conflicts
+        def _conflicts(files):
+            if not_matched_by_source_delete:
+                return bool(files)
+            df = (
+                spark.read.format("olive").option("table", table)
+                .option("files", ",".join(files)).load(path)
+            )
+            return bool(
+                df.join(keys.distinct(), key_cols, "left_semi")
+                .limit(1).count() > 0
+            )
+
+        precommit = _serializable_gate(
+            spark, path, v0, isolation, _conflicts, dv_add
+        )
         if not affected:
             # pure insert: a plain append commit (its own snapshot
             # entry).  The batch may have shrunk (intra-source dedup,
@@ -1994,7 +1981,6 @@ def merge_upsert(
             rows = rw_rows + _live_rows(
                 spark, path, [f for f, _dv in dv_add], table
             ) - dead_dv
-        dv_files = [f for f, _dv in dv_add]
         # MATERIALIZE the retained tombstones before the swap: the
         # lineage scans the affected originals, which the swap is about
         # to retire — a lazy plan executed afterwards would re-read a
@@ -2019,22 +2005,11 @@ def merge_upsert(
             }
         if new_cols:  # sidecar BEFORE data: see _seed_evolved_sidecar
             _seed_evolved_sidecar(path, table, src.schema, new_cols)
-        layout = _partition_layout(path)
-        wipe_all = (
-            rw_rows == 0 and not dv_files
-            and len(rw_files) >= len(_list_chunk_files(path))
-        )
-        n_files = max(1, math.ceil(rw_rows / target_rows))
-        finals = _rewrite_and_swap(
-            _shape_for_write(write_df, n_files, layout)
-            if (rw_rows or wipe_all) else None,
-            path, rw_files, run,
+        finals = _commit_rewrite(
+            path, run, "merge", write_df, rw_rows, rw_files, dv_add,
             table=table, target_rows=target_rows,
-            retain_history=retain_history, prefix="merge",
-            layout=layout, commit_tag=commit_tag, precommit=precommit,
-            empty=(rw_rows == 0 and not wipe_all),
-            dv_add=dv_add,
-            op_params={"keys": list(key_cols)},
+            retain_history=retain_history, precommit=precommit,
+            op_params={"keys": list(key_cols)}, commit_tag=commit_tag,
         )
         if new_cols and finals:
             _update_schema_sidecar(
@@ -2047,7 +2022,7 @@ def merge_upsert(
     return {
         "files_rewritten": len(rw_files),
         "files_added": len(finals),
-        "files_dv": len(dv_files),
+        "files_dv": len(dv_add),
         "rows_after_in_rewritten": rows,
         "inserted_only": False,
         "version": current_version(path),
@@ -2298,11 +2273,31 @@ def _broadcastable(spark, rows: int, key_types) -> bool:
     return limit >= 0 and rows * width <= limit
 
 
+def _merge_key_count(src, keys: "list[str]", who: str) -> int:
+    """Distinct key tuples of a delete-and-insert merge source (txn and
+    branch merges), from ONE aggregate that also answers "is any key
+    duplicated?" — refused, standard MERGE semantics (Delta/Iceberg
+    raise on several source rows per target match).  The count sizes
+    the key side for :func:`_broadcastable`."""
+    from pyspark.sql import functions as F
+
+    most, n_keys = (
+        src.groupBy(*keys).count()
+        .agg(F.max("count"), F.count("*")).first()
+    )
+    if most is not None and most > 1:
+        raise ValueError(
+            f"{who} has duplicate key tuples on {keys} — MERGE requires "
+            "at most one source row per key"
+        )
+    return n_keys
+
+
 def _discover_and_stage_dvs(
     spark, path: str, table: str, match, run: str,
     mode: str, dv_threshold: float,
     key_cols: "list[str] | None" = None, broadcast: bool = False,
-    scan=None,
+    scan=None, dv_dir: "str | None" = None,
 ) -> "list[tuple[str, str | None, int]]":
     """Fused discovery + DV staging, the one matching pass every
     mutation runs: ONE slim ``fileColumn``/``posColumn`` scan finds the
@@ -2315,7 +2310,8 @@ def _discover_and_stage_dvs(
     or a DataFrame of key tuples on ``key_cols`` (merge/txn merge, a
     semi-join; the scan projects the keys).  ``scan`` overrides the
     relation (merge passes its bounds-filtered one, shared with its
-    stale-row prune).
+    stale-row prune; branches pass their ref's view).  ``dv_dir``: see
+    _stage_dvs.
 
     No shuffle when it can be avoided (guide §2.4): scan partitions
     bin-pack WHOLE files (_pack_files), so a predicate filter — or a
@@ -2337,7 +2333,7 @@ def _discover_and_stage_dvs(
             )
         return _stage_dvs(
             spark, path, table, scan.filter(F.expr(match)).select(fc, pc),
-            run, mode, dv_threshold,
+            run, mode, dv_threshold, dv_dir=dv_dir,
         )
     if scan is None:
         scan = _discovery_scan(spark, path, table, fc, columns=key_cols, pc=pc)
@@ -2346,13 +2342,13 @@ def _discover_and_stage_dvs(
     ).select(fc, pc)
     return _stage_dvs(
         spark, path, table, hits if broadcast else hits.repartition(fc),
-        run, mode, dv_threshold,
+        run, mode, dv_threshold, dv_dir=dv_dir,
     )
 
 
 def _stage_dvs(
     spark, path: str, table: str, positions, run: str,
-    mode: str, dv_threshold: float,
+    mode: str, dv_threshold: float, dv_dir: "str | None" = None,
 ) -> "list[tuple[str, str | None, int]]":
     """Stage one deletion vector per file of ``positions`` — a
     (``_olive_file``, ``_olive_pos``) relation whose rows for any one
@@ -2370,8 +2366,14 @@ def _stage_dvs(
     file's total is unknown.  The totals are the manifest's (validated
     against the size on disk, like manifest.lookup) with the file's
     header as fallback — the same figures _file_rows reads.  Staged
-    blobs are invisible until _rewrite_and_swap publishes them;
+    blobs land at ``<dv_dir>/<file>/<run>.dv.staging`` (``dv_dir``
+    defaults to the table's ``_olive_dv/``; a branch passes its own)
+    and stay invisible until their commit renames the suffix away
+    (_rewrite_and_swap, a txn publish, branch._record_branch_dvs);
     abandoned ``.dv.staging`` files are vacuum-swept debris."""
+    from olive_spark.format.deletion import DV_DIR
+
+    dv_dir = dv_dir or DV_DIR
     thr = float(dv_threshold)
     # totals ride a broadcast (one manifest parse on the driver, shipped
     # once per executor) so the mapInArrow UDF stays import-light — an
@@ -2449,7 +2451,7 @@ def _stage_dvs(
                         total = None
                 write = bool(total) and n <= thr * total
             if write:
-                dv_rel = _os.path.join(_D.DV_DIR, rel, f"{run}.dv")
+                dv_rel = _os.path.join(dv_dir, rel, f"{run}.dv")
                 dest = _os.path.join(path, dv_rel) + ".staging"
                 _os.makedirs(_os.path.dirname(dest), exist_ok=True)
                 blob = _D.encode_dv(pos.astype(_np.uint64), table=table)
@@ -2542,6 +2544,105 @@ def _discard_staged_dvs(path: str, dv_add: "list[tuple[str, str]]") -> None:
             pass
 
 
+def _serializable_gate(spark, path: str, v0: int, isolation: str,
+                       conflicts, dv_add) -> "object | None":
+    """The serializable check every mutation runs after its staging
+    pass: None under the default WriteSerializable, else the locked
+    precommit of :func:`_serializable_precommit`.  A conflict found
+    here discards the DVs the mutation already staged, so an aborted
+    mutation leaves no debris."""
+    _test_hook("serializable_window")
+    if isolation != "serializable":
+        return None
+    try:
+        return _serializable_precommit(spark, path, v0, conflicts)
+    except Exception:
+        _discard_staged_dvs(path, dv_add)
+        raise
+
+
+def _commit_rewrite(
+    path: str, run: str, prefix: str, write_df, rows: "int | None",
+    rw_files: "list[str]", dv_add: "list[tuple[str, str]]", *,
+    table: str, target_rows: int, retain_history: bool,
+    precommit=None, op_params: "dict | None" = None,
+    commit_tag: "str | None" = None,
+) -> "list[str]":
+    """The commit tail of the DV-staging verbs (delete_where,
+    update_where, merge_upsert) and replace_where:
+    ``write_df`` (``rows`` rows) replaces ``rw_files`` and the staged
+    ``dv_add`` land in the same version through _rewrite_and_swap.
+    ``rows`` comes from metadata where the verb could size it; None
+    persists and counts the write set instead (unpersisted after the
+    swap).  Returns the activated file names."""
+    from olive_spark.datasource.olive_datasource import _list_chunk_files
+
+    cached = None
+    if rows is None:
+        cached = write_df = write_df.persist()
+        rows = write_df.count()
+    try:
+        # every row of every rewritten file gone: write no replacement
+        # (remove-only rewrite) — UNLESS that would empty the whole
+        # table, where the zero-row write's schema sentinel is exactly
+        # what keeps the directory scannable
+        wipe_all = (
+            rows == 0 and not dv_add
+            and len(rw_files) >= len(_list_chunk_files(path))
+        )
+        empty = rows == 0 and not wipe_all
+        layout = None if empty else _partition_layout(path)
+        return _rewrite_and_swap(
+            None if empty else _shape_for_write(
+                write_df, max(1, math.ceil(rows / target_rows)), layout
+            ),
+            path, rw_files, run,
+            table=table, target_rows=target_rows,
+            retain_history=retain_history, prefix=prefix, layout=layout,
+            empty=empty, dv_add=dv_add, precommit=precommit,
+            op_params=op_params, commit_tag=commit_tag,
+        )
+    finally:
+        if cached is not None:
+            cached.unpersist()
+
+
+def _finish_mutation(
+    spark, path: str, table: str, run: str, prefix: str, staged,
+    write_df, rows: "int | None", *, v0: int, isolation: str, conflicts,
+    rows_key: str, target_rows: int, retain_history: bool,
+    op_params: dict,
+) -> dict:
+    """Everything after the staging pass of a predicate mutation
+    (delete_where, update_where): split ``staged`` into rewrite- and
+    DV-classed files, run the serializable gate, commit, and report.
+    A mutation that matched nothing is a clean no-op (no version)."""
+    from olive_spark.format.snapshots import current_version
+
+    pre_version = current_version(path)
+    rw_files = [f for f, dv, _n in staged if dv is None]
+    dv_add = [(f, dv) for f, dv, _n in staged if dv is not None]
+    finals: list = []
+    if staged:
+        precommit = _serializable_gate(
+            spark, path, v0, isolation, conflicts, dv_add
+        )
+        finals = _commit_rewrite(
+            path, run, prefix, write_df, rows, rw_files, dv_add,
+            table=table, target_rows=target_rows,
+            retain_history=retain_history, precommit=precommit,
+            op_params=op_params,
+        )
+    return {
+        "files_rewritten": len(rw_files),
+        "files_added": len(finals),
+        "files_dv": len(dv_add),
+        rows_key: int(sum(n for _f, _dv, n in staged)),
+        "version": current_version(path) if staged else pre_version,
+        "pre_version": pre_version,
+    }
+
+
 def _table_columns_local(path: str, table: str) -> "list[str] | None":
     """Column names of ``table`` from the first live chunk file's
     header — pure local I/O, no Spark relation (used to slim discovery
@@ -2600,12 +2701,12 @@ def delete_where(
     ``compact`` later materializes DVs (its folding scan never sees the
     deleted rows, and retiring the originals retires their DVs).
 
-    100 TB shape: discovery is a scan + filter + count over file names
-    (stats/Bloom-pruned where the condition allows), collecting only
-    FILE NAMES + counts; DV positions are written straight from
-    executors; rewrites touch only rewrite-classed files.  Same
-    single-writer contract as :func:`compact`; partitioned layouts are
-    preserved.
+    100 TB shape: discovery and DV staging are ONE fused pass
+    (:func:`_discover_and_stage_dvs`) over a slim scan, stats/Bloom-
+    pruned where the condition allows, collecting only FILE NAMES +
+    counts; DV positions are written straight from executors; rewrites
+    touch only rewrite-classed files.  Same single-writer contract as
+    :func:`compact`; partitioned layouts are preserved.
 
     ``isolation="serializable"`` (default WriteSerializable, SURVEY §2)
     re-validates the predicate against files appended between this
@@ -2617,21 +2718,8 @@ def delete_where(
     version, pre_version}."""
     from pyspark.sql import functions as F
 
-    from olive_spark.datasource import register_olive
-    from olive_spark.format.snapshots import current_version
-
-    if mode not in ("auto", "dv", "rewrite"):
-        raise ValueError("mode must be 'auto', 'dv', or 'rewrite'")
-    if isolation not in ("write_serializable", "serializable"):
-        raise ValueError(
-            "isolation must be 'write_serializable' or 'serializable'"
-        )
-    register_olive(spark)
-    _recover_pending(path)
-    _seed_snapshot_log(path)
-    v0 = current_version(path)
+    v0 = _begin_mutation(spark, path, isolation, mode=mode)
     fc = "_olive_file"
-    cond = F.expr(condition)
     run = uuid.uuid4().hex[:8]
     # fused discovery + DV staging (r15, guide §1.2/§2.4): one slim scan
     # on its own (possibly pushdown-pruned) relation finds the affected
@@ -2643,116 +2731,37 @@ def delete_where(
     staged = _discover_and_stage_dvs(
         spark, path, table, condition, run, mode, dv_threshold
     )
-    affected = [f for f, _dv, _n in staged]
-    n_deleted = int(sum(n for _f, _dv, n in staged))
-    pre_version = current_version(path)
-    if not affected:
-        return {
-            "files_rewritten": 0,
-            "files_added": 0,
-            "files_dv": 0,
-            "rows_deleted": 0,
-            "version": pre_version,
-            "pre_version": pre_version,
-        }
-    dv_files = [f for f, dv, _n in staged if dv is not None]
     rw_files = [f for f, dv, _n in staged if dv is None]
-    dv_add = [(f, dv) for f, dv, _n in staged if dv is not None]
-    _test_hook("serializable_window")
-    if isolation == "serializable":
-        try:
-            precommit = _serializable_precommit(
-                spark, path, v0,
-                _condition_conflicts(spark, path, table, condition),
-            )
-        except Exception:
-            _discard_staged_dvs(path, dv_add)
-            raise
-    else:
-        precommit = None
-    if not rw_files:
-        # pure merge-on-read commit: no file moves at all — the swap
-        # core still provides the intent manifest + one-version entry
-        _rewrite_and_swap(
-            None, path, [], run,
-            table=table, target_rows=target_rows,
-            retain_history=retain_history, prefix="delete",
-            layout=None, empty=True, dv_add=dv_add,
-            precommit=precommit,
-            op_params={"condition": condition, "strategy": "dv"},
+    survivors, rows = None, 0
+    if rw_files:
+        survivors = (
+            spark.read.format("olive")
+            .option("table", table)
+            .option("fileColumn", fc)
+            .load(path)
+            .filter(F.col(fc).isin(rw_files))
+            .filter(~F.coalesce(F.expr(condition), F.lit(False)))
+            .drop(fc)
         )
-        return {
-            "files_rewritten": 0,
-            "files_added": 0,
-            "files_dv": len(dv_files),
-            "rows_deleted": n_deleted,
-            "version": current_version(path),
-            "pre_version": pre_version,
-        }
-    tagged = (
-        spark.read.format("olive")
-        .option("table", table)
-        .option("fileColumn", fc)
-        .load(path)
+        # survivors = live rows of the rewrite-classed files minus their
+        # matched counts, both already known (None: count them)
+        live = _live_rows_local(path, rw_files, table)
+        matched_rw = sum(n for _f, dv, n in staged if dv is None)
+        rows = live - matched_rw if live is not None \
+            and live >= matched_rw else None
+    return _finish_mutation(
+        spark, path, table, run, "delete", staged, survivors, rows,
+        v0=v0, isolation=isolation,
+        conflicts=_condition_conflicts(spark, path, table, condition),
+        rows_key="rows_deleted", target_rows=target_rows,
+        retain_history=retain_history,
+        # a pure merge-on-read delete moves no file at all
+        op_params={"condition": condition} if rw_files
+        else {"condition": condition, "strategy": "dv"},
     )
-    survivors = (
-        tagged.filter(F.col(fc).isin(rw_files))
-        .filter(~F.coalesce(cond, F.lit(False)))
-        .drop(fc)
-    )
-    layout = _partition_layout(path)
-    # output sizing from METADATA when possible (r15, guide §5): the
-    # survivor count is live rows of the rewrite-classed files minus
-    # their matched counts (both already known), so the old
-    # persist+count pass — which cached the whole rewrite set to learn
-    # one number — is skipped; the write below is then the ONLY scan
-    live = _live_rows_local(path, rw_files, table)
-    matched_rw = sum(n for f, dv, n in staged if dv is None)
-    cached = None
-    if live is not None and live - matched_rw >= 0:
-        rows = live - matched_rw
-    else:
-        cached = survivors.persist()
-        rows = cached.count()
-    try:
-        # every row of every affected file deleted: write no
-        # replacement (remove-only rewrite) — UNLESS that would empty
-        # the whole table, where the zero-row write's schema sentinel
-        # is exactly what keeps the directory scannable
-        from olive_spark.datasource.olive_datasource import _list_chunk_files
-
-        wipe_all = (
-            rows == 0 and not dv_files
-            and len(rw_files) >= len(_list_chunk_files(path))
-        )
-        n_files = max(1, math.ceil(rows / target_rows))
-        finals = _rewrite_and_swap(
-            _shape_for_write(cached if cached is not None else survivors,
-                             n_files, layout),
-            path, rw_files,
-            run,
-            table=table, target_rows=target_rows,
-            retain_history=retain_history, prefix="delete",
-            layout=layout,
-            empty=(rows == 0 and not wipe_all),
-            dv_add=dv_add,
-            precommit=precommit,
-            op_params={"condition": condition},
-        )
-    finally:
-        if cached is not None:
-            cached.unpersist()
-    return {
-        "files_rewritten": len(rw_files),
-        "files_added": len(finals),
-        "files_dv": len(dv_files),
-        "rows_deleted": n_deleted,
-        "version": current_version(path),
-        "pre_version": pre_version,
-    }
 
 
-@_locked(1)
+@_locked(1, heal_txns=True)
 def replace_where(
     spark,
     path: str,
@@ -2793,12 +2802,9 @@ def replace_where(
     rows_written, version, pre_version}."""
     from pyspark.sql import functions as F
 
-    from olive_spark.datasource import register_olive
     from olive_spark.format.snapshots import current_version
 
-    register_olive(spark)
-    _recover_pending(path)
-    _seed_snapshot_log(path)
+    _begin_mutation(spark, path)
     fc = "_olive_file"
     cond = F.expr(condition)
     # guard 1: every source row must satisfy the predicate
@@ -2851,39 +2857,22 @@ def replace_where(
                 "aligned predicate, or delete_where + append for "
                 "row-level surgery"
             )
-    rows_replaced = int(sum(matched.values()))
-    layout = _partition_layout(path)
-    run = uuid.uuid4().hex[:8]
-    n_files = max(1, math.ceil(max(n_written, 1) / target_rows))
-    from olive_spark.datasource.olive_datasource import _list_chunk_files
-
-    # replacing every file with nothing: keep the zero-row schema
-    # sentinel write so the directory stays scannable (same rule as
-    # delete_where's wipe-all)
-    wipe_all = (
-        n_written == 0 and len(affected) >= len(_list_chunk_files(path))
-    )
-    finals = _rewrite_and_swap(
-        _shape_for_write(source, n_files, layout)
-        if (n_written or wipe_all) else None,
-        path, affected, run,
-        table=table, target_rows=target_rows,
-        retain_history=retain_history, prefix="replace",
-        layout=layout,
-        empty=(n_written == 0 and not wipe_all),
-        op_params={"predicate": condition},
+    finals = _commit_rewrite(
+        path, uuid.uuid4().hex[:8], "replace", source, n_written,
+        affected, [], table=table, target_rows=target_rows,
+        retain_history=retain_history, op_params={"predicate": condition},
     )
     return {
         "files_replaced": len(affected),
         "files_added": len(finals),
-        "rows_replaced": rows_replaced,
+        "rows_replaced": int(sum(matched.values())),
         "rows_written": n_written,
         "version": current_version(path),
         "pre_version": pre_version,
     }
 
 
-@_locked(1)
+@_locked(1, heal_txns=True)
 def update_where(
     spark,
     path: str,
@@ -2917,10 +2906,13 @@ def update_where(
     expression whose type differs from the column's is rejected (cast
     explicitly) — the same no-silent-casts rule as MERGE.
 
-    100 TB shape: discovery is one file-name aggregate over a scan the
-    condition prunes via stats/Bloom where possible; the rewrite
-    touches only affected files and preserves hive layouts.  Same
-    single-writer contract as :func:`compact`.
+    100 TB shape: discovery and DV staging are ONE fused pass
+    (:func:`_discover_and_stage_dvs`) over a slim scan the condition
+    prunes via stats/Bloom where possible — DV positions are written
+    from executors and the driver collects one row per affected file;
+    the rewrite touches only rewrite-classed files and preserves
+    partitioned layouts.  Same single-writer contract as
+    :func:`compact`.
 
     ``isolation="serializable"``: as in :func:`delete_where`.
 
@@ -2928,21 +2920,9 @@ def update_where(
     pre_version}."""
     from pyspark.sql import functions as F
 
-    from olive_spark.datasource import register_olive
-    from olive_spark.format.snapshots import current_version
-
     if not set_exprs:
         raise ValueError("set_exprs must be non-empty")
-    if mode not in ("auto", "dv", "rewrite"):
-        raise ValueError("mode must be 'auto', 'dv', or 'rewrite'")
-    if isolation not in ("write_serializable", "serializable"):
-        raise ValueError(
-            "isolation must be 'write_serializable' or 'serializable'"
-        )
-    register_olive(spark)
-    _recover_pending(path)
-    _seed_snapshot_log(path)
-    v0 = current_version(path)
+    v0 = _begin_mutation(spark, path, isolation, mode=mode)
     fc = "_olive_file"
     tagged = (
         spark.read.format("olive")
@@ -2971,44 +2951,17 @@ def update_where(
             "SET expression types differ from the column "
             f"(col, expr, table): {bad} — cast explicitly"
         )
-    cond = F.expr(condition)
     run = uuid.uuid4().hex[:8]
     # fused discovery + DV staging — one slim scan, not two (r15; see
     # delete_where / _discover_and_stage_dvs); the rewrite keeps using
-    # the plain `tagged` relation
+    # the plain `tagged` relation.  The DV leg's staged positions mask
+    # out the PRE-update rows
     staged = _discover_and_stage_dvs(
         spark, path, table, condition, run, mode, dv_threshold
     )
-    affected = [f for f, _dv, _n in staged]
-    n_updated = int(sum(n for _f, _dv, n in staged))
-    pre_version = current_version(path)
-    if not affected:
-        return {
-            "files_rewritten": 0,
-            "files_added": 0,
-            "files_dv": 0,
-            "rows_updated": 0,
-            "version": pre_version,
-            "pre_version": pre_version,
-        }
-    dv_files = [f for f, dv, _n in staged if dv is not None]
     rw_files = [f for f, dv, _n in staged if dv is None]
-    dv_add = [(f, dv) for f, dv, _n in staged if dv is not None]
-    _test_hook("serializable_window")
-    if isolation == "serializable":
-        try:
-            precommit = _serializable_precommit(
-                spark, path, v0,
-                _condition_conflicts(spark, path, table, condition),
-            )
-        except Exception:
-            _discard_staged_dvs(path, dv_add)
-            raise
-    else:
-        precommit = None
-    # DV leg: the fused pass already staged the matched positions that
-    # mask out the PRE-update rows (dv_add above)
-    upd = F.coalesce(cond, F.lit(False))
+    dv_files = [f for f, dv, _n in staged if dv is not None]
+    upd = F.coalesce(F.expr(condition), F.lit(False))
     set_cols = [
         (
             F.when(upd, F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)
@@ -3018,56 +2971,35 @@ def update_where(
     ]
     # write set: rewrite-classed files in full (ONE select — every SET
     # expression reads the ORIGINAL columns, simultaneous assignment;
-    # matched rows take the expression, others pass through) ...
+    # matched rows take the expression, others pass through) plus the
+    # UPDATED COPIES of DV-masked rows, appended as new data (their
+    # originals vanish behind the deletion vector)
     parts = []
     if rw_files:
         parts.append(
             tagged.filter(F.col(fc).isin(rw_files)).select(*set_cols)
         )
     if dv_files:
-        # ...plus the UPDATED COPIES of DV-masked rows, appended as new
-        # data (their originals vanish behind the deletion vector)
         parts.append(
             tagged.filter(F.col(fc).isin(dv_files))
             .filter(upd).select(*set_cols)
         )
-    rewritten = functools.reduce(lambda a, b: a.unionByName(b), parts)
-    layout = _partition_layout(path)
-    # output sizing from METADATA when possible (r15, see delete_where):
-    # the rewrite carries every live row of the rewrite-classed files
-    # plus the updated copies of the DV-masked matches — both known
+    rewritten = functools.reduce(
+        lambda a, b: a.unionByName(b), parts
+    ) if parts else None
+    # sized from metadata: every live row of the rewrite-classed files
+    # plus the updated copies of the DV-masked matches (None: count)
     live = _live_rows_local(path, rw_files, table) if rw_files else 0
-    matched_dv = sum(n for f, dv, n in staged if dv is not None)
-    cached = None
-    if live is not None:
-        rows = live + matched_dv
-    else:
-        cached = rewritten.persist()
-        rows = cached.count()
-    try:
-        n_files = max(1, math.ceil(rows / target_rows))
-        finals = _rewrite_and_swap(
-            _shape_for_write(cached if cached is not None else rewritten,
-                             n_files, layout),
-            path, rw_files,
-            run, precommit=precommit,
-            table=table, target_rows=target_rows,
-            retain_history=retain_history, prefix="update",
-            layout=layout,
-            dv_add=dv_add,
-            op_params={"condition": condition},
-        )
-    finally:
-        if cached is not None:
-            cached.unpersist()
-    return {
-        "files_rewritten": len(rw_files),
-        "files_added": len(finals),
-        "files_dv": len(dv_files),
-        "rows_updated": n_updated,
-        "version": current_version(path),
-        "pre_version": pre_version,
-    }
+    rows = None if live is None else live + sum(
+        n for _f, dv, n in staged if dv is not None
+    )
+    return _finish_mutation(
+        spark, path, table, run, "update", staged, rewritten, rows,
+        v0=v0, isolation=isolation,
+        conflicts=_condition_conflicts(spark, path, table, condition),
+        rows_key="rows_updated", target_rows=target_rows,
+        retain_history=retain_history, op_params={"condition": condition},
+    )
 
 
 @_locked(0)

@@ -423,7 +423,8 @@ def participant_txn_state(path: str, txn_id: str) -> "str | None":
 
 def heal_committed_slices(path: str) -> int:
     """Participant-side heal (ADVICE r13): before a file-rewriting op
-    (compact / delete_where / merge) touches ``path``, publish any
+    (compact, respec_partitions, merge_upsert, delete_where,
+    replace_where, update_where) touches ``path``, publish any
     COMMITTED-but-unpublished multi-table-txn slice whose staged DVs
     still reference the about-to-be-rewritten files.  Resolution goes
     through the staging-time coordinator pointers exactly like vacuum's
@@ -521,25 +522,14 @@ def _stage_merge(
     whole source stages as an append; PUBLISH lands both legs in ONE
     tagged snapshot entry.  Duplicate source key tuples are refused
     (standard MERGE semantics, same rule as branch.merge_on_branch)."""
-    from pyspark.sql import functions as F
-
     from olive_spark.format.snapshots import list_live_files
     from olive_spark.ops.maintenance import (
-        _broadcastable, _discover_and_stage_dvs,
+        _broadcastable, _discover_and_stage_dvs, _merge_key_count,
     )
 
-    # one aggregate answers both "any duplicate key?" and "how many
-    # keys?" (the latter picks broadcast vs shuffled key join)
-    most, n_keys = (
-        src_df.groupBy(*keys).count()
-        .agg(F.max("count"), F.count("*")).first()
+    n_keys = _merge_key_count(
+        src_df, keys, f"multi_table_txn merge: source for {path}"
     )
-    if most is not None and most > 1:
-        raise ValueError(
-            f"multi_table_txn merge: source for {path} has duplicate "
-            f"key tuples on {keys} — MERGE requires at most one source "
-            "row per key"
-        )
     _drop_coord_ptr(path, txn_id, coordinator)
     staged: list = []
     if list_live_files(path):

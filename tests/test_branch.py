@@ -833,9 +833,11 @@ def test_rebase_branch_duplicate_rows_count_correct(spark, tmp_path):
     matched = scan.filter(
         (F.col(fc) == first_file) & (F.col("k") == 1)
     ).select(fc, pc)
-    from olive_spark.ops.branch import _record_branch_dvs, _stage_branch_dvs
+    from olive_spark.ops.branch import _branch_dv_dir, _record_branch_dvs
+    from olive_spark.ops.maintenance import _stage_dvs
 
-    staged = _stage_branch_dvs(matched, fc, pc, t, "dup", "r0", "data")
+    staged = _stage_dvs(spark, t, "data", matched, "r0", "dv", 0.0,
+                        dv_dir=_branch_dv_dir("dup"))
     assert sum(n for _t, _d, n in staged) == 2
     _record_branch_dvs(t, "dup", staged)
     compact(spark, t, retain_history=True)
@@ -904,3 +906,50 @@ def test_rebase_branch_crash_before_record_is_redoable(spark, tmp_path):
     branch.publish_branch(spark, t, "fx")
     got = sorted(r["k"] for r in _live(spark, t).collect())
     assert got == [k for k in range(20) if k not in (4, 14)]
+
+
+def test_branch_dvs_recorded_under_old_blob_name_still_publish(
+    spark, tmp_path
+):
+    """Branches staged before branch deletes went through the table's
+    DV stager recorded their blobs as ``_olive_branch/<name>/_dv/
+    <run>-<key>.dv``.  Preview and publish go by the name the ref
+    records, so such a branch still previews and publishes."""
+    import hashlib
+
+    import numpy as np
+
+    from olive_spark.format.deletion import encode_dv
+    from olive_spark.ops import branch
+
+    t = str(tmp_path / "t")
+    _seed(spark, t, 0, 20)
+    branch.create_branch(t, "old")
+    branch.append_to_branch(spark, _mk(spark, 20, 30), t, "old")
+    fc, pc = "_olive_file", "_olive_pos"
+    hits = (
+        branch._branch_view(
+            spark, t, "old", branch._load_ref(t, "old"), tagged=True
+        ).filter("k IN (3, 25)").select(fc, pc).collect()
+    )
+    by_file: dict = {}
+    for r in hits:
+        by_file.setdefault(r[fc], []).append(r[pc])
+    assert len(by_file) == 2  # one base file, one branch-staged file
+    ref = branch._load_ref(t, "old")
+    ref["dvs"] = {}
+    for rel, pos in by_file.items():
+        key = hashlib.sha1(rel.encode()).hexdigest()[:12]
+        dv_rel = os.path.join("_olive_branch", "old", "_dv", f"r0-{key}.dv")
+        os.makedirs(os.path.dirname(os.path.join(t, dv_rel)), exist_ok=True)
+        with open(os.path.join(t, dv_rel), "wb") as f:
+            f.write(encode_dv(np.asarray(pos, np.uint64), table="data"))
+        ref["dvs"][rel] = [dv_rel]
+    branch._write_ref(t, "old", ref)
+    want = [k for k in range(30) if k not in (3, 25)]
+    got = sorted(r["k"] for r in branch.scan_branch(spark, t, "old").collect())
+    assert got == want
+    assert sorted(r["k"] for r in _live(spark, t).collect()) == list(range(20))
+    branch.publish_branch(spark, t, "old")
+    assert sorted(r["k"] for r in _live(spark, t).collect()) == want
+    assert not os.path.isdir(os.path.join(t, "_olive_branch", "old"))

@@ -618,9 +618,9 @@ def test_key_join_dv_stage_keeps_files_in_one_task(spark, tmp_path, monkeypatch)
     seen = []
     real = M._stage_dvs
 
-    def spy(spark_, path_, table, positions, *a):
+    def spy(spark_, path_, table, positions, *a, **kw):
         seen.append(plan_of(positions))
-        return real(spark_, path_, table, positions, *a)
+        return real(spark_, path_, table, positions, *a, **kw)
 
     monkeypatch.setattr(M, "_stage_dvs", spy)
     for i, bc in enumerate((True, False)):
@@ -653,6 +653,79 @@ def test_key_join_dv_stage_keeps_files_in_one_task(spark, tmp_path, monkeypatch)
     assert "hashpartitioning(_olive_file" in shuffled
     assert not glob.glob(os.path.join(path, "_olive_dv", "**", "*.staging"),
                          recursive=True)
+
+
+def test_branch_delete_stages_dvs_without_shuffle(spark, tmp_path, monkeypatch):
+    """delete_on_branch stages through the table's own DV stager on the
+    branch view's scan, which packs whole files per task — base files
+    and branch-staged files alike — so the positions reach the stager
+    with no exchange at all."""
+    from olive_spark import register_olive
+    from olive_spark.ops import branch
+    from olive_spark.ops import maintenance as M
+
+    register_olive(spark)
+    path = str(tmp_path / "t")
+    spark.range(1000).selectExpr("id AS k", "id*2 AS v").repartition(2) \
+        .write.format("olive").mode("append").save(path)
+    branch.create_branch(path, "b")
+    branch.append_to_branch(
+        spark, spark.range(1000, 1100).selectExpr("id AS k", "id*2 AS v"),
+        path, "b",
+    )
+    seen = []
+    real = M._stage_dvs
+
+    def spy(spark_, path_, table, positions, *a, **kw):
+        seen.append(plan_of(positions))
+        return real(spark_, path_, table, positions, *a, **kw)
+
+    monkeypatch.setattr(M, "_stage_dvs", spy)
+    out = branch.delete_on_branch(spark, path, "b", "k % 7 = 0")
+    assert out["rows_deleted"] == 158  # 0, 7, ..., 1099
+    (p,) = seen
+    assert "BatchScan olive" in p, p
+    assert "Exchange" not in p, p
+    assert branch.scan_branch(spark, path, "b").count() == 1100 - 158
+
+
+def test_pagerank_round_reuses_cached_links_layout(spark, monkeypatch):
+    """A pagerank round's step, captured from the real loop as it is
+    checkpointed: its only shuffle is the per-dst aggregate.  The
+    cached ``links`` side is read in its hash-on-src layout and never
+    re-shuffled; the small ranks side is broadcast."""
+    import re
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from olive_spark.ops.graph import pagerank
+
+    steps = []
+    real = ClassicDataFrame.localCheckpoint
+
+    def spy(self, *a, **kw):
+        p = plan_of(self)
+        if "CollectMetrics" in p:  # the step carries the Observation
+            steps.append(p)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", spy)
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 50) for i in range(50)]
+        + [(i, (i + 1) % 50) for i in range(50)],
+        "src long, dst long",
+    )
+    assert pagerank(edges, max_iter=1).count() == 50
+    (p,) = steps
+    shuffles = re.findall(
+        r"^\(\d+\) Exchange\n(?:.+\n)*?Arguments: (\w+\(\w+)", p, re.M
+    )
+    assert shuffles == ["hashpartitioning(node"], p
+    assert re.search(
+        r"Scan ExistingRDD\n(?:.+\n)*?Arguments: \[src#.*hashpartitioning\(src",
+        p,
+    ), p
+    assert "BroadcastExchange" in p, p
 
 
 def test_nmbs_discovery_is_anti_join_not_cartesian(spark, tmp_path):

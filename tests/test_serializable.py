@@ -93,35 +93,71 @@ def _scan(spark, path):
 
 
 def test_delete_serializable_aborts_on_intersecting_append(spark, tmp_path):
+    _aborts_on_intersecting_append(spark, tmp_path, "delete_where")
+
+
+def test_update_dv_serializable_aborts_on_intersecting_append(
+    spark, tmp_path
+):
+    """The same gate on a DV-staging update: its deletion vectors are
+    already staged when the conflict is found, and the abort removes
+    them."""
+    _aborts_on_intersecting_append(spark, tmp_path, "update_where")
+
+
+def _aborts_on_intersecting_append(spark, tmp_path, verb):
     from olive_spark.format.errors import SerializableConflict
     from olive_spark.ops import maintenance as M
 
     path = str(tmp_path / "t")
+    mutate, rows_key, rows_after = {
+        "delete_where": (
+            lambda: M.delete_where(
+                spark, path, "id >= 50", isolation="serializable"
+            ),
+            "rows_deleted", 50,
+        ),
+        "update_where": (
+            lambda: M.update_where(
+                spark, path, {"v": "v + 1"}, "id >= 50", mode="dv",
+                isolation="serializable",
+            ),
+            "rows_updated", 105,
+        ),
+    }[verb]
     _mk(spark, path)
-    # the racing append's ids 300..304 MATCH the delete predicate
-    M._TEST_HOOKS["serializable_window"] = _hook_append(
-        tmp_path, path, 300, 305
-    )
+    # the racing append's ids 300..304 MATCH the mutation's predicate
+    append = _hook_append(tmp_path, path, 300, 305)
+    staged_in_window = []
+
+    def hook():
+        staged_in_window.extend(glob.glob(
+            os.path.join(path, "**", "*.dv.staging"), recursive=True
+        ))
+        append()
+
+    M._TEST_HOOKS["serializable_window"] = hook
     try:
         with pytest.raises(SerializableConflict, match="serializable conflict"):
-            M.delete_where(
-                spark, path, "id >= 50", isolation="serializable"
-            )
+            mutate()
     finally:
         M._TEST_HOOKS.clear()
-    # NOTHING visible from the aborted delete: all 100 original rows +
-    # the 5 appended remain, no DVs, no staged debris
+    if verb == "update_where":
+        assert staged_in_window  # mode="dv" staged before the gate
+    # NOTHING visible from the aborted mutation: all 100 original rows
+    # + the 5 appended remain unchanged, no DVs, no staged debris
     assert _scan(spark, path).count() == 105
     assert _scan(spark, path).filter("id >= 50 and id < 100").count() == 50
+    assert _scan(spark, path).filter("v = id * 2").count() == 105
     assert not glob.glob(os.path.join(path, "_olive_dv", "**", "*.dv"),
                          recursive=True)
     assert not glob.glob(os.path.join(path, "**", "*.staging"),
                          recursive=True)
     # re-running the mutation (the documented recovery) now succeeds
-    # and deletes the appended rows too — it reads the new snapshot
-    out = M.delete_where(spark, path, "id >= 50", isolation="serializable")
-    assert out["rows_deleted"] == 55
-    assert _scan(spark, path).count() == 50
+    # and reaches the appended rows too — it reads the new snapshot
+    out = mutate()
+    assert out[rows_key] == 55
+    assert _scan(spark, path).count() == rows_after
 
 
 def test_delete_serializable_commits_on_disjoint_append(spark, tmp_path):
@@ -167,6 +203,11 @@ def test_merge_serializable_conflict_and_commit(spark, tmp_path):
     got = _scan(spark, path)
     assert got.count() == 101  # original 100 + raced append; no merge
     assert got.filter("id = 1 and v = 2").count() == 1  # update not applied
+    # the DV the key match staged for id=1 is gone with the abort
+    assert not glob.glob(os.path.join(path, "_olive_dv", "**", "*.dv"),
+                         recursive=True)
+    assert not glob.glob(os.path.join(path, "**", "*.staging"),
+                         recursive=True)
     # disjoint: racing append far from the source keys — merge commits
     src2 = spark.createDataFrame([(500, 5), (1, 111)], "id long, v long")
     M._TEST_HOOKS["serializable_window"] = _hook_append(

@@ -726,8 +726,36 @@ def test_compact_heals_committed_slice_before_rewrite(spark, tmp_path):
     crash and recover_txns must PUBLISH the committed delete slice
     before rewriting — otherwise the rewrite retires the DV targets and
     the committed DELETE silently evaporates at redo."""
-    from olive_spark.ops import txn
     from olive_spark.ops.maintenance import compact
+
+    _heals_committed_slice_before(
+        spark, tmp_path, lambda b: compact(spark, b, target_rows=1 << 20)
+    )
+
+
+@pytest.mark.parametrize("verb", ["update_where", "replace_where"])
+def test_rewriting_verbs_heal_committed_slice(spark, tmp_path, verb):
+    """Every verb that retires files heals first, not only compact: a
+    rewriting update or a whole-file replace between the crash and
+    recover_txns would otherwise strand the committed delete, and the
+    redo would refuse it as "no longer live"."""
+    from olive_spark.ops import maintenance as M
+
+    rewrite = {
+        # SET leaves the key alone, so the healed table reads 0..9
+        "update_where": lambda b: M.update_where(
+            spark, b, {"v": "upper(v)"}, "k >= 0", mode="rewrite"
+        ),
+        # file-aligned: the healed file's live rows are exactly k < 10
+        "replace_where": lambda b: M.replace_where(
+            spark, b, _mk(spark, 0, 10, "b"), "k >= 0"
+        ),
+    }[verb]
+    _heals_committed_slice_before(spark, tmp_path, rewrite)
+
+
+def _heals_committed_slice_before(spark, tmp_path, rewrite):
+    from olive_spark.ops import txn
 
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     _seed(spark, a, 0, 10, "a")
@@ -742,8 +770,9 @@ def test_compact_heals_committed_slice_before_rewrite(spark, tmp_path):
     finally:
         txn._CRASH_HOOKS.clear()
     assert _vals(spark, b) == list(range(20))   # delete not yet live
-    # the dead coordinator's write lock on b is stealable; compact runs
-    compact(spark, b, target_rows=1 << 20)
+    # the dead coordinator's write lock on b is stealable; the rewrite
+    # runs
+    rewrite(b)
     # heal-before-rewrite: the committed delete is live, not lost
     assert _vals(spark, b) == list(range(10))
     # coordinator recovery finds the slice already published (idempotent)
